@@ -873,9 +873,10 @@ def main():
     # at 150+ keys the full queries line above overflows it — PERF_r13/r14
     # both degraded to `per_query: {}` / `now_bench_ok: false`. Two
     # redundancies restore a driver-visible per-query surface:
-    # (a) the complete result object is written to bench_results.json
-    #     beside the repo root, so any consumer that can read a file gets
-    #     the full map regardless of tail size;
+    # (a) the complete result object is written to
+    #     .scale/bench_results.json (ignored, so a run never dirties the
+    #     tree), so any consumer that can read a file gets the full map
+    #     regardless of tail size;
     # (b) every query prints its own SHORT JSON line below — at ~50 chars
     #     per line any 2 KB tail window carries the last ~40 keys intact.
     # The compact headline stays the FINAL line (it is the line the
@@ -888,7 +889,9 @@ def main():
         "sf": float(sf),
     }
     try:
-        with open(os.path.join(REPO, "bench_results.json"), "w") as f:
+        out_dir = os.path.join(REPO, ".scale")
+        os.makedirs(out_dir, exist_ok=True)
+        with open(os.path.join(out_dir, "bench_results.json"), "w") as f:
             json.dump(full_result, f, indent=1, sort_keys=True)
     except OSError as e:
         print(f"# bench_results.json write failed: {e}", file=sys.stderr)

@@ -77,6 +77,12 @@ def pack_concat(
     """
     if capacity <= 0:
         raise ValueError("capacity must be positive")
+    clash = sorted(
+        {id_col, "shard", "start_offset", "n_tokens", "seq_first", "seq_last"}
+        & set(keep_cols)
+    )
+    if clash:
+        raise ValueError(f"keep_cols {clash} collide with the manifest's own columns")
     base, tok = _with_tokens(df, text_col, token_col)
     shard = F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
     w = Window.partitionBy("shard").orderBy(id_col)

@@ -96,13 +96,6 @@ def time_string_as_ms(s: str) -> int:
     return int(value * _TIME_UNITS_MS[unit])
 
 
-def _get_sqs(parameters: Mapping[str, str], name: str) -> Optional[str]:
-    v = parameters.get(_SQS_PREFIX + name)
-    if v is None:
-        v = parameters.get(_SQS_PREFIX_REF + name)
-    return v
-
-
 def _positive_int(parameters: Mapping[str, str], key: str, default: int, raw: Optional[str] = None) -> int:
     s = raw if raw is not None else parameters.get(key)
     if s is None:

@@ -6249,7 +6249,9 @@ def _incremental_curation_dir_for(sf: str) -> str:
     # v3 (r14): the gated plane is folded into the pack manifest
     # (keep_cols) — the manifest schema changed, so stale v2 states
     # (separate gated dirs, 6-column manifests) must not be replayed
-    fp = hashlib.md5(f"{ident}:curation-incr-v3".encode()).hexdigest()[:16]
+    # v4: the pack delta carries its cursor totals (one plane-partitioned
+    # dir per batch) — prewarm in the layout the trigger now writes
+    fp = hashlib.md5(f"{ident}:curation-incr-v4".encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), "spark_graft_curation_incr", fp)
 
 
@@ -6265,8 +6267,8 @@ def _ensure_incremental_curation(spark, sf: str) -> str:
         process_curation_batch_incremental,
         read_frozen_thresholds,
     )
-    from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
-        _read_pointer as _pack_ptr,
+    from spark_streaming_sql_s3_connector_spark.streaming.state_io import (
+        read_pointer as _pack_ptr,
     )
 
     pdir = _incremental_curation_dir_for(sf)
@@ -6333,10 +6335,13 @@ def _curation_trigger_serve_only(spark, sf):
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         _batch_survivors,
         _gate_frozen,
-        _gated_dir,
+        _pack_state_dir,
         _score,
         process_curation_batch_incremental,
         read_frozen_thresholds,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
+        read_manifest_batch,
     )
 
     pdir = _ensure_incremental_curation(spark, sf)
@@ -6345,7 +6350,9 @@ def _curation_trigger_serve_only(spark, sf):
         batch, 2, pdir,
         expected_total_items=1_000_000, monitor=False, vacuum_every=None,
     )
-    stored = spark.read.parquet(_gated_dir(pdir, 2)).select("doc_id", "lang")
+    stored = read_manifest_batch(spark, _pack_state_dir(pdir), 2).select(
+        "doc_id", "lang"
+    )
     want = _gate_frozen(
         _score(_batch_survivors(spark, pdir, 2, "doc_id")),
         read_frozen_thresholds(pdir),
@@ -6379,9 +6386,12 @@ def _curation_trigger_bare(spark, sf):
     bit asserting the trigger recorded its per-stage attribution
     sidecar (`read_trigger_timings`)."""
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
-        _gated_dir,
+        _pack_state_dir,
         process_curation_batch_incremental,
         read_trigger_timings,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
+        read_manifest_batch,
     )
 
     pdir = _ensure_incremental_curation(spark, sf)
@@ -6395,7 +6405,7 @@ def _curation_trigger_bare(spark, sf):
         {"line_screen", "exact_screen", "finalize_pack", "total"} <= set(t)
     )
     return (
-        spark.read.parquet(_gated_dir(pdir, 2))
+        read_manifest_batch(spark, _pack_state_dir(pdir), 2)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_gated"))
         .withColumn("timings_ok", F.lit(timings_ok))

@@ -19,23 +19,16 @@ cadence, never a side channel):
 - ``root/vectors``  — the RAW landed vectors: the index stores only
   8-bit codes, so a retrain NEEDS the raw vectors; landing them beside
   the index makes the lifecycle self-contained instead of assuming
-  some other system kept them. Layout (r12): one ``batch=<id>`` dir
-  per trigger (plus ``batch=bootstrap``), FOLDED into a versioned
-  ``base/v=<n>`` behind an atomic ``_latest`` pointer by
-  :func:`fold_landed_vectors` — which rides the refresh (the rebuild
+  some other system kept them. A `streaming/state_plane.py` plane:
+  one ``batch=<id>`` dir per trigger (plus ``batch=bootstrap``),
+  folded by :func:`fold_landed_vectors` on the refresh (the rebuild
   reads the folded base) and the ``compact_every`` cadence, so the
   plane holds ONE base + the post-horizon deltas instead of one dir
-  per trigger forever (at 10⁴ triggers/day the unbounded listing
-  would sit on the hot refresh path). Raw-float RETENTION is still
-  O(corpus) by design (codes cannot retrain); the optional
-  ``retain_fraction`` knob ages the corpus down deterministically at
-  fold time for deployments that accept a subsampled retrain/serve
-  set.
+  per trigger forever. Raw-float RETENTION is still O(corpus) by
+  design (codes cannot retrain); the optional ``retain_fraction`` knob
+  ages the corpus down deterministically at fold time.
 - ``root/moments``  — the streaming per-dim moment state
   (`streaming/drift.embedding_moment_batch`)
-- ``root/baseline`` — versioned d-row snapshot of the TRAINING-set
-  moments of the CURRENT quantizers (bootstrap corpus at build; the
-  landed union at each refresh)
 - ``root/drift_state`` — ONE versioned dir (``v=<n>/baseline`` +
   ``v=<n>/window``) behind ONE atomic pointer: the TRAINING-set
   moments of the CURRENT quantizers (bootstrap corpus at build; old
@@ -85,15 +78,18 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import stage_timings, state_io
+from spark_streaming_sql_s3_connector_spark.operators.ann_index import load_index_meta
+from spark_streaming_sql_s3_connector_spark.streaming import (
+    stage_timings,
+    state_io,
+    state_plane,
+)
 from spark_streaming_sql_s3_connector_spark.streaming.stage_timings import (
     StageClock,
     span as _span,
 )
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _read_pointer,
-    _write_pointer,
-)
+
+_read_pointer = state_io.read_pointer
 
 _INDEX = "index"
 _VECTORS = "vectors"
@@ -161,10 +157,13 @@ def _write_drift_state(
     # Materialize the d-row frames first so every v_dir read completes
     # before any delete; fresh versions (the common path, incl. the
     # benched forced refresh) skip the extra tiny jobs.
+    checkpointed: list[DataFrame] = []
     if _read_pointer(sub_root) == version:
         baseline = baseline.localCheckpoint(eager=True)
+        checkpointed.append(baseline)
         if window is not None:
             window = window.localCheckpoint(eager=True)
+            checkpointed.append(window)
 
     def _write(df: DataFrame, name: str):
         return lambda: df.select(*_MOMENT_COLS).coalesce(1).write.mode(
@@ -178,11 +177,17 @@ def _write_drift_state(
     writes = [_write(baseline, _BASELINE)]
     if window is not None:
         writes.append(_write(window, _WINDOW))
-    run_concurrently(*writes)
-    _write_pointer(sub_root, version)
-    for v in state_io.list_versions(sub_root):
-        if v != version:
-            state_io.remove_tree(os.path.join(sub_root, f"v={v}"))
+    try:
+        run_concurrently(*writes)
+        state_io.write_pointer(sub_root, version)
+        for v in state_io.list_versions(sub_root):
+            if v != version:
+                state_io.remove_tree(os.path.join(sub_root, f"v={v}"))
+    finally:
+        # release the checkpoint blocks: DataFrame.unpersist does not
+        # reach a local checkpoint's RDD, so unpersist it directly
+        for df in checkpointed:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _read_drift_state(
@@ -205,80 +210,40 @@ def _read_drift_state(
 
 
 _BOOTSTRAP_LABEL = "batch=bootstrap"
-_VEC_SCHEMA_FILE = "_schema.json"
 
 
-def _vectors_schema_path(root: str) -> str:
-    return os.path.join(_vectors_dir(root), _VEC_SCHEMA_FILE)
-
-
-def _write_vectors_schema_once(root: str, schema) -> None:
-    """Persist the landed (id, vec) schema beside the plane so a
-    zero-row trigger dir (or the fold of one) never hits parquet schema
-    inference — exclusive create, an existing file wins."""
-    import json
-
-    state_io.write_text_atomic(
-        _vectors_schema_path(root), json.dumps(schema.jsonValue()), overwrite=False
-    )
-
-
-def _vectors_reader(spark: SparkSession, root: str):
-    import json
-
-    from pyspark.sql.types import StructType
-
-    try:
-        raw = state_io.read_text(_vectors_schema_path(root))
-    except FileNotFoundError:
-        return spark.read  # pre-r12 state: inference (never-empty dirs)
-    return spark.read.schema(StructType.fromJson(json.loads(raw)))
-
-
-def _live_vector_paths(root: str, exclude_batch: Optional[int] = None) -> list[str]:
-    """The plane's live dirs: folded base (if any), else the bootstrap
-    landing, plus integer deltas above the fold horizon — the same
-    pointer-liveness rule every other plane uses. ``exclude_batch``
-    drops the in-flight trigger's dir (refresh reads committed data
-    only)."""
-    return [p for p, _ in _ordered_vector_paths(root, exclude_batch)]
-
-
-def _ordered_vector_paths(
-    root: str, exclude_batch: Optional[int] = None
-) -> list[tuple[str, int]]:
-    """Live vector dirs WITH their landing order — the rank delete
-    markers kill by: bootstrap is −1 (older than every marker), a
-    folded base ranks as the fold horizon (every row in it landed at or
-    below it, every live marker strictly above — the screens' exact
-    argument), a delta is its batch id."""
+def _ranked_vectors(
+    spark: SparkSession, root: str, exclude_batch: Optional[int] = None
+) -> list[state_plane.Ranked]:
+    """Live vector frames WITH their landing rank — what delete markers
+    kill by: the folded base ranks as the fold horizon, a delta as its
+    batch id, and (before the first fold) the bootstrap landing as −1,
+    older than every marker. ``exclude_batch`` drops the in-flight
+    trigger's delta dir (refresh reads committed data only) — never the
+    base: a replay whose id the pointer already covers finds its rows
+    in the base verbatim."""
     vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    out: list[tuple[str, int]] = []
-    if ptr is not None:
-        out.append((os.path.join(vdir, "base", f"v={ptr}"), int(ptr)))
-    elif state_io.is_dir(os.path.join(vdir, _BOOTSTRAP_LABEL)):
-        out.append((os.path.join(vdir, _BOOTSTRAP_LABEL), -1))
-    for b in state_io.list_batch_ids(vdir):
-        if (ptr is None or b > ptr) and b != exclude_batch:
-            out.append((os.path.join(vdir, f"batch={b}"), b))
+    read = state_plane.reader(spark, vdir).parquet
+    boot = os.path.join(vdir, _BOOTSTRAP_LABEL)
+    skip = (
+        None if exclude_batch is None else state_plane.delta_dir(vdir, exclude_batch, "")
+    )
+    out = [(r, read(p)) for r, p in state_plane.live_paths(vdir, "") if p != skip]
+    if state_io.read_pointer(vdir) is None and state_io.is_dir(boot):
+        out.insert(0, (-1, read(boot)))
     return out
 
 
 _VEC_DELETED = "_deleted"
-_VEC_MARKER_SCHEMA = "_id bigint, t bigint"
 
 
 def delete_vectors_from_lifecycle(
     docs: DataFrame, batch_id: int, root: str, id_col: Optional[str] = None
 ) -> None:
     """Remove documents' RAW vectors from the lifecycle's retrain
-    corpus: write an id-keyed delete marker under
-    ``vectors/_deleted/batch=<batch_id>`` (overwrite-by-batch-dir —
-    replay-convergent). A marker at batch t kills vector rows LANDED
-    strictly before t (dir-granular insert order, exactly the screens'
-    rule in `exact_dedup.delete_docs_from_screen`), so a later
-    re-ingest of the same id lands above t and serves again.
+    corpus: write an id-keyed `state_plane` tombstone under
+    ``vectors/_deleted/batch=<batch_id>`` — it kills vector rows landed
+    before the batch, and a later re-ingest of the id serves again.
 
     This is the half the index tombstone cannot give: `ann_index`
     tombstones stop the CODES from serving, but the lifecycle retrains
@@ -289,67 +254,16 @@ def delete_vectors_from_lifecycle(
     deleted rows' mass — aggregate planes are not id-addressable,
     same as the delete router documents for rollup/profile/drift.)"""
     if id_col is None:
-        from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-            load_index_meta,
-        )
-
         id_col = load_index_meta(_index_dir(root))["id_col"]
-    (
-        docs.select(F.col(id_col).cast("bigint").alias("_id"))
-        .distinct()
-        .withColumn("t", F.lit(int(batch_id)).cast("bigint"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(_vectors_dir(root), _VEC_DELETED, f"batch={batch_id}"))
+    state_plane.write_tombstones(
+        docs.select(F.col(id_col).cast("bigint").alias("_id")),
+        batch_id,
+        _vector_marker_root(root),
     )
 
 
-def _vector_marker_ids(root: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(_vectors_dir(root), _VEC_DELETED))
-
-
-def _live_vector_markers(spark: SparkSession, root: str) -> Optional[DataFrame]:
-    """Un-applied delete markers (``_id | t``): dirs strictly above the
-    fold pointer (at/below it they were applied physically by the fold
-    and GC'd — a replayed folded dir is filtered here). None when the
-    lifecycle has never deleted."""
-    ids = _vector_marker_ids(root)
-    if not ids:
-        return None
-    ptr = state_io.read_pointer(_vectors_dir(root))
-    live = [t for t in ids if ptr is None or t > ptr]
-    if not live:
-        return None
-    vdir = _vectors_dir(root)
-    frames = [
-        spark.read.schema(_VEC_MARKER_SCHEMA).parquet(
-            os.path.join(vdir, _VEC_DELETED, f"batch={t}")
-        )
-        for t in live
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def _apply_vector_markers(
-    frames: list[tuple[int, DataFrame]],
-    marks: Optional[DataFrame],
-    id_col: str,
-) -> list[DataFrame]:
-    """Anti-join markers onto order-tagged vector frames: a frame of
-    order b loses the ids of markers with t > b (marker set is the
-    delete sliver — broadcast)."""
-    if marks is None:
-        return [f for _, f in frames]
-    out = []
-    for b, f in frames:
-        m = marks.where(F.col("t") > F.lit(int(b))).select(
-            F.col("_id").alias(id_col)
-        )
-        out.append(f.join(F.broadcast(m), id_col, "left_anti"))
-    return out
+def _vector_marker_root(root: str) -> str:
+    return os.path.join(_vectors_dir(root), _VEC_DELETED)
 
 
 def fold_landed_vectors(
@@ -359,20 +273,14 @@ def fold_landed_vectors(
     retain_fraction: Optional[float] = None,
 ) -> Optional[int]:
     """Fold the landed raw-vector dirs (bootstrap + integer deltas with
-    id <= ``upto_batch``; None = all) into ``vectors/base/v=<n>`` behind
-    an atomically-flipped pointer, then GC the folded dirs — the rollup
-    fold discipline applied to the lifecycle's retrain corpus, which
-    otherwise accumulates one dir per trigger forever. Returns the new
+    id <= ``upto_batch``; None = all) into ``vectors/base/v=<n>``
+    through `state_plane.fold` — the lifecycle's retrain corpus would
+    otherwise accumulate one dir per trigger forever. Returns the new
     fold horizon (−1 for a bootstrap-only fold: batch ids start at 0,
     so the sentinel keeps every future delta live), or None when
-    nothing to fold.
-
-    Crash-safe at every step: an unflipped base is unread; after the
-    flip the folded dirs are dead to every reader, so a replayed
-    trigger rewriting its ``batch=<id>`` dir below the horizon is
-    invisible (its rows already sit in the base verbatim). Pass the
-    last COMMITTED batch id as ``upto_batch`` beside a live stream —
-    the lifecycle's own call sites use ``batch_id - 1``.
+    nothing to fold. Pass the last COMMITTED batch id as
+    ``upto_batch`` beside a live stream — the lifecycle's own call
+    sites use ``batch_id - 1``.
 
     ``retain_fraction`` (optional, (0, 1]) deterministically subsamples
     the folded base by id hash — CORPUS RETENTION, not compression: the
@@ -380,73 +288,56 @@ def fold_landed_vectors(
     ids leave the served index at that point. For full-fidelity
     refresh leave it None; raw-float retention is then O(corpus), the
     honest price of retrainability (module doc)."""
-    from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-        load_index_meta,
-    )
-
     if retain_fraction is not None and not 0 < retain_fraction <= 1:
         raise ValueError("retain_fraction must be in (0, 1]")
     vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    ids = state_io.list_batch_ids(vdir)
-    pending = [
-        b
-        for b in ids
-        if (ptr is None or b > ptr) and (upto_batch is None or b <= upto_batch)
-    ]
-    has_bootstrap = ptr is None and state_io.is_dir(
-        os.path.join(vdir, _BOOTSTRAP_LABEL)
+    boot = os.path.join(vdir, _BOOTSTRAP_LABEL)
+    has_bootstrap = state_io.read_pointer(vdir) is None and state_io.is_dir(boot)
+    pending = state_plane.pending(
+        vdir, "", None if upto_batch is None else upto_batch + 1
     )
-    if not pending and not has_bootstrap:
-        return None
-    reader = _vectors_reader(spark, root)
-    ordered: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        ordered.append((int(ptr), reader.parquet(os.path.join(vdir, "base", f"v={ptr}"))))
-    elif has_bootstrap:
-        ordered.append((-1, reader.parquet(os.path.join(vdir, _BOOTSTRAP_LABEL))))
-    ordered.extend(
-        (b, reader.parquet(os.path.join(vdir, f"batch={b}"))) for b in pending
-    )
-    new_v = max(pending) if pending else -1
-    # apply delete markers PHYSICALLY (order rule: a marker t kills rows
-    # landed strictly before t; the folded base ranks as new_v, which
-    # keeps any marker above the new horizon exact at read time)
-    marks = _live_vector_markers(spark, root)
-    if marks is not None or (retain_fraction is not None and retain_fraction < 1):
-        id_col = load_index_meta(_index_dir(root))["id_col"]
-    frames = _apply_vector_markers(ordered, marks, id_col) if marks is not None else [
-        f for _, f in ordered
-    ]
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    if retain_fraction is not None and retain_fraction < 1:
-        df = df.where(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(1_000_000))
-            < F.lit(int(retain_fraction * 1_000_000))
+    reader = state_plane.reader(spark, vdir)
+    subsample = retain_fraction is not None and retain_fraction < 1
+
+    def merge(ranked, marks):
+        # apply delete markers PHYSICALLY (the folded base ranks as the
+        # new horizon, which keeps any marker above it exact at read)
+        id_col = (
+            load_index_meta(_index_dir(root))["id_col"]
+            if marks is not None or subsample
+            else None
         )
-    # fold many per-trigger dribbles into cluster-parallel files: the
-    # fold is exactly the file-count compactor, so don't carry the
-    # input's one-file-per-trigger layout into the base
-    df = df.repartition(max(1, spark.sparkContext.defaultParallelism))
-    df.write.mode("overwrite").parquet(os.path.join(vdir, "base", f"v={new_v}"))
-    state_io.write_pointer(vdir, new_v)
-    if has_bootstrap:
-        state_io.remove_tree(os.path.join(vdir, _BOOTSTRAP_LABEL))
-    for b in ids:
-        if b <= new_v:
-            state_io.remove_tree(os.path.join(vdir, f"batch={b}"))
-    # markers at/below the new horizon are applied in the base — GC;
-    # markers above it stay live and keep filtering at read
-    for t in _vector_marker_ids(root):
-        if t <= new_v:
-            state_io.remove_tree(os.path.join(vdir, _VEC_DELETED, f"batch={t}"))
-    if ptr is not None and ptr != new_v:
-        state_io.remove_tree(os.path.join(vdir, "base", f"v={ptr}"))
+        df = state_plane.union(state_plane.apply_tombstones(ranked, marks, id_col))
+        if subsample:
+            df = df.where(
+                F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(1_000_000))
+                < F.lit(int(retain_fraction * 1_000_000))
+            )
+        # fold many per-trigger dribbles into cluster-parallel files: the
+        # fold is exactly the file-count compactor, so don't carry the
+        # input's one-file-per-trigger layout into the base
+        return df.repartition(max(1, spark.sparkContext.defaultParallelism))
+
+    new_v = state_plane.fold(
+        spark,
+        vdir,
+        merge,
+        read=reader.parquet,
+        deltas="",
+        # the pointer never passes the newest folded landing: a marker
+        # above it stays live, so the later landing of its own batch t
+        # (which it must not kill) still arrives above the pointer
+        before=max(pending) + 1 if pending else 0,
+        marker_root=_vector_marker_root(root),
+        extra=[(-1, reader.parquet(boot))] if has_bootstrap else [],
+    )
+    # dead behind any pointer (a crashed fold's leftover too) — pure GC
+    state_io.remove_tree(boot)
+    if new_v is None:
+        return None
     # record the base size for the cadence gate (footer-only count of
     # the just-written base — no data read)
-    base_rows = reader.parquet(os.path.join(vdir, "base", f"v={new_v}")).count()
+    base_rows = reader.parquet(state_plane.base_dir(vdir, new_v)).count()
     state_io.write_text_atomic(
         os.path.join(vdir, _FOLD_META), json.dumps({"base_rows": int(base_rows)})
     )
@@ -477,14 +368,11 @@ def fold_landed_vectors_if_due(
     footer-only count over the PENDING dirs (bounded by the cadence
     window), never the base."""
     vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    if ptr is None:
+    if state_io.read_pointer(vdir) is None:
         return fold_landed_vectors(spark, root, upto_batch=upto_batch)
-    pending = [
-        b
-        for b in state_io.list_batch_ids(vdir)
-        if b > ptr and (upto_batch is None or b <= upto_batch)
-    ]
+    pending = state_plane.pending(
+        vdir, "", None if upto_batch is None else upto_batch + 1
+    )
     if not pending:
         return None
     if len(pending) < max_deltas:
@@ -498,8 +386,8 @@ def fold_landed_vectors_if_due(
             base_rows = None  # pre-gate state: fold once to learn the size
         if base_rows is not None and base_rows > 0:
             pending_rows = (
-                _vectors_reader(spark, root)
-                .parquet(*[os.path.join(vdir, f"batch={b}") for b in pending])
+                state_plane.reader(spark, vdir)
+                .parquet(*[state_plane.delta_dir(vdir, b, "") for b in pending])
                 .count()
             )
             if pending_rows < growth_fraction * base_rows:
@@ -530,7 +418,7 @@ def bootstrap_ann_lifecycle(
     )
 
     landed = corpus.select(F.col(id_col), F.col(vec_col))
-    _write_vectors_schema_once(root, landed.schema)
+    state_plane.write_schema_once(_vectors_dir(root), landed.schema)
     landed.write.mode("overwrite").parquet(
         os.path.join(_vectors_dir(root), _BOOTSTRAP_LABEL)
     )
@@ -552,25 +440,14 @@ def read_landed_vectors(
     (:func:`delete_vectors_from_lifecycle` — so a retrain never
     resurrects a deleted id). Explicit live-path reads: a stale dir
     below the fold horizon is never opened, not merely filtered."""
-    ordered = _ordered_vector_paths(root, exclude_batch)
-    if not ordered:
+    ranked = _ranked_vectors(spark, root, exclude_batch)
+    if not ranked:
         raise FileNotFoundError(f"no landed vectors under {root}")
-    reader = _vectors_reader(spark, root)
-    marks = _live_vector_markers(spark, root)
-    if marks is None:
-        return reader.parquet(*[p for p, _ in ordered])
-    from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-        load_index_meta,
+    marks = state_plane.live_tombstones(
+        spark, _vectors_dir(root), _vector_marker_root(root)
     )
-
-    id_col = load_index_meta(_index_dir(root))["id_col"]
-    frames = _apply_vector_markers(
-        [(b, reader.parquet(p)) for p, b in ordered], marks, id_col
-    )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    id_col = None if marks is None else load_index_meta(_index_dir(root))["id_col"]
+    return state_plane.union(state_plane.apply_tombstones(ranked, marks, id_col))
 
 
 def _subtract_moments(live: DataFrame, snap: Optional[DataFrame]) -> DataFrame:
@@ -693,7 +570,6 @@ def refresh_lifecycle_if_drifted(
     (see :func:`read_lifecycle_timings`)."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         build_ann_index,
-        load_index_meta,
     )
 
     if threshold < 0:
@@ -790,7 +666,6 @@ def process_ann_lifecycle_batch(
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         append_to_ann_index,
         compact_ann_index,
-        load_index_meta,
     )
     from spark_streaming_sql_s3_connector_spark.streaming.drift import (
         embedding_moment_batch,
@@ -800,9 +675,9 @@ def process_ann_lifecycle_batch(
     clock = StageClock()
     meta = load_index_meta(_index_dir(root))
     with _span(clock, "landing_write"):
-        land_dir = os.path.join(_vectors_dir(root), f"batch={batch_id}")
+        land_dir = state_plane.delta_dir(_vectors_dir(root), batch_id, "")
         landing = batch.select(F.col(meta["id_col"]), F.col(meta["vec_col"]))
-        _write_vectors_schema_once(root, landing.schema)
+        state_plane.write_schema_once(_vectors_dir(root), landing.schema)
         landing.write.mode("overwrite").parquet(land_dir)
         landed = spark.read.schema(
             batch.select(meta["id_col"], meta["vec_col"]).schema

@@ -54,6 +54,7 @@ from spark_streaming_sql_s3_connector_spark.streaming import (
     line_dedup,
     stage_timings,
     state_io,
+    state_plane,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
@@ -62,12 +63,6 @@ from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
 
 def _timings_dir(pipeline_dir: str) -> str:
     return os.path.join(pipeline_dir, "_timings")
-
-
-def _span(clock: Optional["_StageClock"], stage: str):
-    import contextlib
-
-    return clock(stage) if clock is not None else contextlib.nullcontext()
 
 
 class _scoped_conf:
@@ -103,22 +98,12 @@ class _scoped_conf:
         return False
 
 
-# r14: the clock/plane machinery moved to streaming/stage_timings.py so
+# r14: the clock/plane machinery lives in streaming/stage_timings.py so
 # the ANN lifecycle shares the exact discipline; these aliases keep the
 # r13 surface (tests, bench) stable
 _TIMINGS_KEEP = stage_timings.KEEP
 _StageClock = stage_timings.StageClock
-
-
-def _write_trigger_timings(
-    pipeline_dir: str, batch_id: int, clock: _StageClock
-) -> None:
-    """Persist one trigger's per-stage wall seconds under
-    ``_timings/batch=<id>`` (atomic, replay-overwrites) and prune
-    beyond the last ``_TIMINGS_KEEP`` batches — the plane is bounded
-    observability, not durable state, so it ages like the reference's
-    rolling metrics window rather than growing with trigger count."""
-    stage_timings.write_stage_timings(_timings_dir(pipeline_dir), batch_id, clock)
+_span = stage_timings.span
 
 
 def read_trigger_timings(
@@ -148,7 +133,7 @@ def _exact_index(pipeline_dir: str) -> str:
 
 
 def _meta_dir(pipeline_dir: str, batch_id: int) -> str:
-    return os.path.join(pipeline_dir, "_meta", f"batch={batch_id}")
+    return state_plane.delta_dir(os.path.join(pipeline_dir, "_meta"), batch_id, "")
 
 
 def _profile_dir(pipeline_dir: str) -> str:
@@ -217,7 +202,9 @@ def process_curation_batch(
         # (doc_id, lang) side table for the finalization gate
         with _span(clock, "meta"):
             meta = batch.select(F.col(id_col), F.col(lang_col))
-            _write_plane_schema_once(os.path.join(pipeline_dir, "_meta"), meta.schema)
+            state_plane.write_schema_once(
+                os.path.join(pipeline_dir, "_meta"), meta.schema
+            )
             meta.write.mode("overwrite").parquet(_meta_dir(pipeline_dir, batch_id))
         if monitor:
             from spark_streaming_sql_s3_connector_spark.streaming.drift import (
@@ -380,21 +367,9 @@ def compact_curation_state(spark: SparkSession, pipeline_dir: str) -> None:
     delta — the only batch a restart could replay; see
     line_dedup.compact_index for why that guard is stricter here than
     label-skew)."""
-    line_dedup.compact_index(spark, _line_index(pipeline_dir))
-    exact_dedup.compact_index(
-        spark,
-        _exact_index(pipeline_dir),
-        upto_batch=_newest_delta(_exact_index(pipeline_dir)),
-    )
-
-
-def _newest_delta(index_dir: str):
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
-    )
-
-    ids = _delta_ids(index_dir)
-    return max(ids) if ids else None
+    for index_dir in (_line_index(pipeline_dir), _exact_index(pipeline_dir)):
+        # both screens share the layout and line_dedup's default horizon
+        line_dedup.compact_index(spark, index_dir)
 
 
 def finalize_curation(
@@ -422,18 +397,7 @@ def finalize_curation(
         quantile_gate_approx,
     )
 
-    docs = line_dedup.read_deduped_docs(spark, _line_index(pipeline_dir))
-    uniq = (
-        exact_dedup.read_unique_ids(spark, _exact_index(pipeline_dir))
-        .select(F.col("doc_id").alias(id_col))
-    )
-    meta = _read_concat_plane(
-        spark, os.path.join(pipeline_dir, "_meta")
-    ).select(id_col, "lang")
-    survivors = docs.join(uniq, id_col).join(meta, id_col)
-    scored = survivors.withColumn(
-        "qscore", F.round(quality_score(F.col("deduped_text")), 6)
-    )
+    scored = _score(_survivors(spark, pipeline_dir, id_col))
     if approx_gate:
         # collect_thresholds: |langs| driver rows, and the gate becomes
         # a literal-map filter — one evaluation of the quality score on
@@ -444,6 +408,25 @@ def finalize_curation(
         )
     else:
         gated = keep_top_fraction(scored, "qscore", ["lang"], frac, id_col=id_col)
+    return _pack_gated(gated, id_col, capacity, num_shards)
+
+
+def _survivors(spark: SparkSession, pipeline_dir: str, id_col: str) -> DataFrame:
+    """Every streamed survivor: line-deduped docs ∩ first-seen exact ids
+    ∩ the (id, lang) side rows."""
+    docs = line_dedup.read_deduped_docs(spark, _line_index(pipeline_dir))
+    uniq = exact_dedup.read_unique_ids(
+        spark, _exact_index(pipeline_dir)
+    ).select(F.col("doc_id").alias(id_col))
+    meta = _read_concat_plane(
+        spark, os.path.join(pipeline_dir, "_meta")
+    ).select(id_col, "lang")
+    return docs.join(uniq, id_col).join(meta, id_col)
+
+
+def _pack_gated(
+    gated: DataFrame, id_col: str, capacity: int, num_shards: int
+) -> DataFrame:
     packed = pack_concat(
         gated, id_col, capacity, text_col="deduped_text", num_shards=num_shards
     )
@@ -492,18 +475,10 @@ def batch_curation(
     survivors = kf.join(keepers, id_col).select(
         id_col, F.col(lang_col).alias("lang"), "deduped_text"
     )
-    scored = survivors.withColumn(
-        "qscore", F.round(quality_score(F.col("deduped_text")), 6)
+    gated = keep_top_fraction(
+        _score(survivors), "qscore", ["lang"], frac, id_col=id_col
     )
-    gated = keep_top_fraction(scored, "qscore", ["lang"], frac, id_col=id_col)
-    packed = pack_concat(
-        gated, id_col, capacity, text_col="deduped_text", num_shards=num_shards
-    )
-    return (
-        gated.select(id_col, "lang", "qscore")
-        .join(packed, id_col)
-        .orderBy(id_col)
-    )
+    return _pack_gated(gated, id_col, capacity, num_shards)
 
 
 # ---------------------------------------------------------------------------
@@ -550,18 +525,6 @@ def batch_curation(
 
 def _pack_state_dir(pipeline_dir: str) -> str:
     return os.path.join(pipeline_dir, "pack_state")
-
-
-def _gated_dir(pipeline_dir: str, batch_id: int) -> str:
-    """Batch ``batch_id``'s gated (id, lang, qscore) rows. r14: the gated
-    plane is FOLDED INTO the pack manifest (``pack_batch_incremental``
-    ``keep_cols`` carries lang/qscore onto the manifest rows, 1:1 with
-    the gated docs), so the rows live in the manifest's own delta dir —
-    one plane write per trigger instead of two, and readers that want
-    only the gated columns select them off the manifest row."""
-    from spark_streaming_sql_s3_connector_spark.streaming.rollup import _delta_dir
-
-    return _delta_dir(os.path.join(_pack_state_dir(pipeline_dir), "pack"), batch_id)
 
 
 def _thresholds_path(pipeline_dir: str) -> str:
@@ -619,112 +582,40 @@ def freeze_quality_thresholds(
     return thr
 
 
-# --- append-only per-batch output planes ((id, lang) ``_meta`` side
-# rows; the gated rows ride the pack manifest since r14): the _PACK
-# concat-fold discipline, so a long-running pipeline's dir count and
-# reader listing cost stay bounded instead of growing one directory per
-# trigger forever. Rows never change in a fold — pure file-count
-# hygiene behind an atomic pointer; the schema persists once at first
-# write so zero-row batches (and the fold itself) never hit parquet
-# schema inference.
-
-
-# atomic `_latest` pointer: state_io is the one shared implementation
-# (object-store capable since r12)
-_read_plane_ptr = state_io.read_pointer
-_write_plane_ptr = state_io.write_pointer
-
-
-def _plane_delta_ids(root: str) -> list:
-    return state_io.list_batch_ids(root)
-
-
-def _plane_schema_path(root: str) -> str:
-    return os.path.join(root, "_schema.json")
-
-
-def _write_plane_schema_once(root: str, schema) -> None:
-    # exclusive create: an existing schema wins (replay/restart convergent)
-    state_io.write_text_atomic(
-        _plane_schema_path(root), json.dumps(schema.jsonValue()), overwrite=False
-    )
-
-
-def _plane_reader(spark: SparkSession, root: str):
-    from pyspark.sql.types import StructType
-
-    try:
-        raw = state_io.read_text(_plane_schema_path(root))
-    except FileNotFoundError:
-        return spark.read
-    return spark.read.schema(StructType.fromJson(json.loads(raw)))
+# --- the append-only (id, lang) ``_meta`` side table (the gated rows
+# ride the pack manifest since r14): a concat-fold state_plane, so a
+# long-running pipeline's dir count stays bounded; rows never change in
+# a fold, and the schema sidecar keeps zero-row batches readable.
 
 
 def _read_concat_plane(spark: SparkSession, root: str) -> DataFrame:
-    """base (if folded) + deltas above the pointer — the whole
-    append-only output. ONE multi-path read: with the persisted schema
-    a zero-row dir reads empty; without one (a pre-r11 state) the
-    inference spans the union of paths, so a _SUCCESS-only dir beside
-    populated ones still reads (the old root-read behavior)."""
-    reader = _plane_reader(spark, root)
-    ptr = _read_plane_ptr(root)
-    paths = []
-    if ptr is not None:
-        paths.append(os.path.join(root, "base", f"v={ptr}"))
-    paths.extend(
-        os.path.join(root, f"batch={b}")
-        for b in _plane_delta_ids(root)
-        if ptr is None or b > ptr
-    )
+    """base (if folded) + deltas above the pointer in ONE multi-path
+    read: with the persisted schema a zero-row dir reads empty; without
+    one (a pre-r11 state) the inference spans the union of paths."""
+    paths = [p for _, p in state_plane.live_paths(root, deltas="")]
     if not paths:
         raise FileNotFoundError(f"no state under {root}")
-    return reader.parquet(*paths)
-
-
-def _compact_concat_plane(
-    spark: SparkSession, root: str, upto_batch: Optional[int] = None
-) -> None:
-    """Fold delta dirs STRICTLY below ``upto_batch`` (all, when None —
-    safe only with no stream writing) into ``base/v=<n>`` and GC them.
-    Concatenation only: a replayed folded batch rewrites a delta at or
-    below the pointer, which readers ignore — and its rows already sit
-    in the base verbatim, so the state converges (the _PACK
-    argument)."""
-    ptr = _read_plane_ptr(root)
-    ids = [
-        b
-        for b in _plane_delta_ids(root)
-        if (ptr is None or b > ptr) and (upto_batch is None or b < upto_batch)
-    ]
-    if not ids:
-        return
-    reader = _plane_reader(spark, root)
-    paths = []
-    if ptr is not None:
-        paths.append(os.path.join(root, "base", f"v={ptr}"))
-    paths.extend(os.path.join(root, f"batch={b}") for b in ids)
-    allf = reader.parquet(*paths)
-    new_v = max(ids)
-    allf.write.mode("overwrite").parquet(os.path.join(root, "base", f"v={new_v}"))
-    _write_plane_ptr(root, new_v)
-    for b in _plane_delta_ids(root):
-        if b <= new_v:
-            state_io.remove_tree(os.path.join(root, f"batch={b}"))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(root, "base", f"v={ptr}"))
+    return state_plane.reader(spark, root).parquet(*paths)
 
 
 def compact_curation_outputs(
     spark: SparkSession, pipeline_dir: str, upto_batch: Optional[int] = None
 ) -> None:
-    """File-count hygiene for the append-only per-batch output plane
-    the incremental finalize maintains outside the pack state — the
-    (id, lang) ``_meta`` side table. (The gated rows ride the pack
-    manifest since r14, whose own compactor `compact_pack_state` folds
-    them on the vacuum cadence.) Piggybacked on the same maintenance
-    cadence as `vacuum()` in `process_curation_batch_incremental`."""
-    _compact_concat_plane(
-        spark, os.path.join(pipeline_dir, "_meta"), upto_batch
+    """File-count hygiene for the ``_meta`` side table the incremental
+    finalize maintains outside the pack state: fold delta dirs STRICTLY
+    below ``upto_batch`` (all, when None — safe only with no stream
+    writing). A replayed folded batch rewrites a delta at or below the
+    pointer, which readers ignore — its rows already sit in the base.
+    Piggybacked on the same maintenance cadence as `vacuum()` in
+    `process_curation_batch_incremental`."""
+    root = os.path.join(pipeline_dir, "_meta")
+    state_plane.fold(
+        spark,
+        root,
+        state_plane.over_union(lambda df: df),
+        read=state_plane.reader(spark, root).parquet,
+        deltas="",
+        before=upto_batch,
     )
 
 
@@ -878,23 +769,8 @@ def finalize_curation_frozen(
             f"no frozen thresholds under {pipeline_dir} — bootstrap via "
             "finalize_curation_batch first"
         )
-    docs = line_dedup.read_deduped_docs(spark, _line_index(pipeline_dir))
-    uniq = exact_dedup.read_unique_ids(
-        spark, _exact_index(pipeline_dir)
-    ).select(F.col("doc_id").alias(id_col))
-    meta = _read_concat_plane(
-        spark, os.path.join(pipeline_dir, "_meta")
-    ).select(id_col, "lang")
-    survivors = docs.join(uniq, id_col).join(meta, id_col)
-    gated = _gate_frozen(_score(survivors), thresholds)
-    packed = pack_concat(
-        gated, id_col, capacity, text_col="deduped_text", num_shards=num_shards
-    )
-    return (
-        gated.select(id_col, "lang", "qscore")
-        .join(packed, id_col)
-        .orderBy(id_col)
-    )
+    gated = _gate_frozen(_score(_survivors(spark, pipeline_dir, id_col)), thresholds)
+    return _pack_gated(gated, id_col, capacity, num_shards)
 
 
 def process_curation_batch_incremental(
@@ -1022,7 +898,8 @@ def _process_curation_batch_incremental_inner(
             compact_curation_outputs(
                 batch.sparkSession, pipeline_dir, upto_batch=batch_id
             )
-    _write_trigger_timings(pipeline_dir, batch_id, clock)
+    # bounded observability (the last _TIMINGS_KEEP triggers), not state
+    stage_timings.write_stage_timings(_timings_dir(pipeline_dir), batch_id, clock)
 
 
 def streaming_curation_incremental(

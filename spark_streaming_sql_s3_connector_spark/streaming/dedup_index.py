@@ -17,12 +17,9 @@ persisted index and, per micro-batch:
    broadcast — history never shuffles);
 3. appends the batch's bands to the index.
 
-Exactly-once under foreachBatch replay uses the same idempotent-write
-layout as `streaming/rollup.py`: every per-batch output OVERWRITES its
-own `batch=<id>` directory, so a replayed batch converges instead of
-duplicating; `compact_index` folds band deltas into a versioned base
-behind an atomically-flipped `_latest` pointer (folded deltas become dead
-garbage — GC is safe at any moment).
+Exactly-once under foreachBatch replay: every per-batch output
+OVERWRITES its own `batch=<id>` directory, and `compact_index` folds the
+band deltas through `streaming/state_plane.py`.
 
 Scale shape: index rows are (band_idx, band_hash, doc_id) — ~20 B × bands
 per document, orders of magnitude smaller than the corpus. The index is
@@ -46,7 +43,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.streaming import state_plane
+from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import _marker_root
 
 from spark_streaming_sql_s3_connector_spark.operators.dedup import (
     _minhash_sig_udf,
@@ -56,20 +54,19 @@ from spark_streaming_sql_s3_connector_spark.operators.dedup import (
 _N_SHARDS = 64
 
 
+_BANDS = "_bands"
+
+
 def _bands_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_bands", f"batch={batch_id}")
+    return state_plane.delta_dir(index_dir, batch_id, _BANDS)
 
 
 def _matches_dir(index_dir: str, batch_id: int) -> str:
     return os.path.join(index_dir, "_matches", f"batch={batch_id}")
 
 
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-
-
 def _band_delta_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_bands"))
+    return state_plane.delta_ids(index_dir, _BANDS)
 
 
 def _index_frames(spark: SparkSession, index_dir: str, before_batch: Optional[int] = None) -> list[DataFrame]:
@@ -78,25 +75,12 @@ def _index_frames(spark: SparkSession, index_dir: str, before_batch: Optional[in
     (`exact_dedup.delete_docs_from_screen` — the band index shares its
     ``_deleted``/pointer layout) anti-join out the deleted docs' band
     rows with the same dir-granular insert-order semantics."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _apply_screen_markers,
-        _live_screen_markers,
-    )
-
-    ptr = _read_pointer(index_dir)
-    tagged: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        tagged.append(
-            (int(ptr), spark.read.parquet(os.path.join(index_dir, "base", f"v={ptr}")))
-        )
-    for i in _band_delta_ids(index_dir):
-        if ptr is not None and i <= ptr:
-            continue
-        if before_batch is not None and i >= before_batch:
-            continue
-        tagged.append((i, spark.read.parquet(_bands_dir(index_dir, i))))
-    return _apply_screen_markers(
-        tagged, _live_screen_markers(spark, index_dir, before_batch)
+    return state_plane.apply_tombstones(
+        state_plane.live(spark, index_dir, deltas=_BANDS, before=before_batch),
+        state_plane.live_tombstones(
+            spark, index_dir, _marker_root(index_dir), before=before_batch
+        ),
+        "_id",
     )
 
 
@@ -134,9 +118,7 @@ def process_batch(
         # batch × history: shard-pruned index scan, broadcast batch side
         frames = _index_frames(batch.sparkSession, index_dir, before_batch=batch_id)
         if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
+            hist = state_plane.union(frames)
             shards = [r["_shard"] for r in new_bands.select("_shard").distinct().collect()]
             hist = hist.where(F.col("_shard").isin(shards))
             nb = new_bands.select(
@@ -216,12 +198,9 @@ def read_candidate_pairs(spark: SparkSession, index_dir: str) -> DataFrame:
 def compact_index(
     spark: SparkSession, index_dir: str, upto_batch: Optional[int] = None
 ) -> Optional[int]:
-    """Fold band deltas into a versioned, shard-partitioned base (sorted
-    within shards so row-group stats tighten) and flip the pointer —
-    identical crash-safety argument to ``rollup.compact_rollup``. Live
-    forget markers fold physically (``_index_frames`` already applies
-    them), their dirs GC, and the pointer advances over marker-only
-    windows — the `exact_dedup.compact_index` delete discipline.
+    """Fold band deltas and forget markers into a versioned,
+    shard-partitioned base (sorted within shards so row-group stats
+    tighten) through `state_plane.fold`.
 
     ``upto_batch``: fold only deltas/markers with id STRICTLY below it
     (the `exact_dedup.compact_index` horizon semantics). Pass the
@@ -235,57 +214,27 @@ def compact_index(
     base back, so the state would become unreadable — the
     `compact_ann_index` all-tombstoned discipline. Drop the state dir
     and rebuild instead."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _deleted_dir,
-        _marker_ids,
-    )
-
-    ids = _band_delta_ids(index_dir)
-    ptr = _read_pointer(index_dir)
-    pending = [
-        i
-        for i in ids
-        if (ptr is None or i > ptr) and (upto_batch is None or i < upto_batch)
-    ]
-    mpending = [
-        t
-        for t in _marker_ids(index_dir)
-        if (ptr is None or t > ptr) and (upto_batch is None or t < upto_batch)
-    ]
-    if not pending and not mpending:
-        return None
-    frames = _index_frames(spark, index_dir, before_batch=upto_batch)
-    if not frames:
-        return None  # marker-only activity on an empty index
-    new_v = max(pending + mpending)
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    if df.isEmpty():
-        raise ValueError(
-            f"refusing to compact MinHash band index {index_dir}: the fold "
-            "would write an empty base (every indexed doc has been "
-            "forgotten), which schema inference cannot read back — drop "
-            "the state directory and rebuild instead"
+    def merge(ranked, marks):
+        df = state_plane.union(state_plane.apply_tombstones(ranked, marks, "_id"))
+        if df.isEmpty():
+            raise ValueError(
+                f"refusing to compact MinHash band index {index_dir}: the fold "
+                "would write an empty base (every indexed doc has been "
+                "forgotten), which schema inference cannot read back — drop "
+                "the state directory and rebuild instead"
+            )
+        return (
+            df.dropDuplicates(["band_idx", "band_hash", "_id"])
+            .repartition("_shard")
+            .sortWithinPartitions("band_idx", "band_hash")
         )
-    (
-        df.dropDuplicates(["band_idx", "band_hash", "_id"])
-        .repartition("_shard")
-        .sortWithinPartitions("band_idx", "band_hash")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(os.path.join(index_dir, "base", f"v={new_v}"))
+
+    return state_plane.fold(
+        spark,
+        index_dir,
+        merge,
+        deltas=_BANDS,
+        before=upto_batch,
+        marker_root=_marker_root(index_dir),
+        partition_by=("_shard",),
     )
-    _write_pointer(index_dir, new_v)
-    # <= new_v covers exactly the folded window plus any pre-pointer
-    # stragglers a crashed earlier GC left behind; dirs above the
-    # horizon stay live
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_bands_dir(index_dir, i))
-    for t in _marker_ids(index_dir):
-        if t <= new_v:
-            state_io.remove_tree(_deleted_dir(index_dir, t))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(index_dir, "base", f"v={ptr}"))
-    return new_v

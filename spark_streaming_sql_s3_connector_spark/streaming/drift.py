@@ -4,10 +4,9 @@ BEFORE the data reaches a training run.
 
 ``operators/drift.py`` compares two materialized corpora; at ingest
 time the "new" side is a stream. Value counts are mergeable, so the
-stream only persists per-batch ``bucket | n`` deltas in the
-``streaming/rollup.py`` idempotent layout (overwrite-by-batch-id delta
-dirs, versioned base + atomic pointer, union-and-merge readers), and
-drift against any baseline is computed at READ time from the merged
+stream only persists per-batch ``bucket | n`` deltas as a
+`streaming/state_plane.py` plane, and drift against any baseline is
+computed at READ time from the merged
 counts via the exact same decimal share/PSI arithmetic as the batch
 operator (``drift_from_counts`` — shared code, not a reimplementation,
 so streaming == batch is an identity up to count equality, which is
@@ -21,7 +20,6 @@ itself never re-scans.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,13 +29,7 @@ from spark_streaming_sql_s3_connector_spark.operators.drift import (
     _NULL_TOKEN,
     drift_from_counts,
 )
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming import state_plane
 
 
 def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> None:
@@ -49,7 +41,7 @@ def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> Non
         batch.groupBy(b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
-        .parquet(_delta_dir(sink_dir, batch_id))
+        .parquet(state_plane.delta_dir(sink_dir, batch_id))
     )
 
 
@@ -80,19 +72,11 @@ def streaming_category_counts(
 
 def read_category_counts(spark: SparkSession, sink_dir: str) -> DataFrame:
     """The merged live counts: base (if compacted) + un-folded deltas."""
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    if not frames:
-        raise FileNotFoundError(f"no drift-count state under {sink_dir}")
-    allc = frames[0]
-    for f in frames[1:]:
-        allc = allc.unionByName(f)
-    return allc.groupBy("bucket").agg(F.sum("n").alias("n"))
+    return _sum_counts(state_plane.read_live(spark, sink_dir, "drift-count state"))
+
+
+def _sum_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("bucket").agg(F.sum("n").alias("n"))
 
 
 def read_drift(
@@ -112,27 +96,19 @@ def read_drift(
 
 
 def compact_drift_counts(spark: SparkSession, sink_dir: str) -> Optional[int]:
-    """Fold base + committed deltas into one base version and flip the
-    pointer; dead dirs GC. Crash-safe at every step (rollup discipline).
-    Returns the new pointer, or None when nothing to fold."""
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    folded = read_category_counts(spark, sink_dir)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
+    """Fold base + committed deltas into one base version
+    (`state_plane.fold`). Returns the new pointer, or None when nothing
+    to fold."""
+    return _fold_summed(spark, sink_dir, _sum_counts)
+
+
+def _fold_summed(spark: SparkSession, sink_dir: str, summed) -> Optional[int]:
+    """Both count planes fold to one small file of mergeable sums."""
+    return state_plane.fold(
+        spark,
+        sink_dir,
+        state_plane.over_union(lambda df: summed(df).coalesce(1)),
     )
-    _write_pointer(sink_dir, new_ptr)
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr
 
 
 # ------------------------------------------------- embedding modality (r9)
@@ -151,7 +127,7 @@ def embedding_moment_batch(
 
     embedding_moments(batch, vec_col).coalesce(1).write.mode(
         "overwrite"
-    ).parquet(_delta_dir(sink_dir, batch_id))
+    ).parquet(state_plane.delta_dir(sink_dir, batch_id))
 
 
 def streaming_embedding_moments(
@@ -187,19 +163,13 @@ def read_embedding_moments(spark: SparkSession, sink_dir: str) -> DataFrame:
     deltas, summed — decimal addition is exact and order-free, so this
     equals the batch moments over the union of admitted rows (the law
     the tests pin)."""
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    if not frames:
-        raise FileNotFoundError(f"no embedding-moment state under {sink_dir}")
-    allm = frames[0]
-    for f in frames[1:]:
-        allm = allm.unionByName(f)
-    return allm.groupBy("dim").agg(
+    return _sum_moments(
+        state_plane.read_live(spark, sink_dir, "embedding-moment state")
+    )
+
+
+def _sum_moments(df: DataFrame) -> DataFrame:
+    return df.groupBy("dim").agg(
         F.sum("n").alias("n"), F.sum("s").alias("s"), F.sum("ss").alias("ss")
     )
 
@@ -237,24 +207,7 @@ def read_embedding_drift(
 def compact_embedding_moments(
     spark: SparkSession, sink_dir: str
 ) -> Optional[int]:
-    """Fold base + committed deltas into one d-row base version (rollup
-    discipline: atomic pointer flip, dead dirs GC, crash-safe at every
-    step). Returns the new pointer, or None when nothing to fold."""
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    folded = read_embedding_moments(spark, sink_dir)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
-    )
-    _write_pointer(sink_dir, new_ptr)
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr
+    """Fold base + committed deltas into one d-row base version
+    (`state_plane.fold`). Returns the new pointer, or None when nothing
+    to fold."""
+    return _fold_summed(spark, sink_dir, _sum_moments)

@@ -66,7 +66,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.streaming import state_io, state_plane
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
@@ -80,10 +80,12 @@ from spark_streaming_sql_s3_connector_spark.operators.dedup import normalized_te
 
 _N_SHARDS = 64
 _BLOOM_SEED = 0x5eed
+# the screen plane's delta subdir; forget markers live under _deleted
+_NEW = "_new"
 
 
 def _new_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_new", f"batch={batch_id}")
+    return state_plane.delta_dir(index_dir, batch_id, _NEW)
 
 
 def _dups_dir(index_dir: str, batch_id: int) -> str:
@@ -100,27 +102,14 @@ def _shard_bitmap_path(index_dir: str, shard: int) -> str:
     return os.path.join(index_dir, "_bloom", f"shard={shard}.bin")
 
 
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-
-
-def _delta_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_new"))
-
-
 # explicit schema: a batch with zero new keys writes a delta dir holding
 # only _SUCCESS, and schema INFERENCE on such a dir throws — a fixed
 # schema reads it as an empty frame instead
 _INDEX_SCHEMA = "_id bigint, key string, _shard int"
-_MARKER_SCHEMA = "_id bigint, t bigint"
 
 
-def _deleted_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_deleted", f"batch={batch_id}")
-
-
-def _marker_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_deleted"))
+def _marker_root(index_dir: str) -> str:
+    return os.path.join(index_dir, "_deleted")
 
 
 def delete_docs_from_screen(
@@ -128,12 +117,9 @@ def delete_docs_from_screen(
 ) -> None:
     """FORGET a set of documents from a persisted screening index (this
     module's exact-key index, or line/passage/minhash-band indexes that
-    share the layout): write an id-keyed delete marker under
-    ``_deleted/batch=<batch_id>``. A marker at batch t kills index rows
-    INSERTED strictly before t — insert order is derivable from the dir
-    layout itself (a delta dir IS its batch id; a compacted base ranks
-    as its fold horizon), so no row schema changes. A later re-ingest
-    of the same content lands in a delta dir above t and screens again.
+    share the layout): write an id-keyed `state_plane` tombstone under
+    ``_deleted/batch=<batch_id>`` — it kills index rows inserted before
+    the batch, and a later re-ingest of the same content screens again.
 
     This is the ``forget`` half of the delete-policy split (retention:
     the state forgets, a legitimate re-crawl is admitted as new). The
@@ -146,103 +132,33 @@ def delete_docs_from_screen(
     The bloom's only dangerous direction is missing bits for present
     keys, which deletion never causes. The FPP the stale bits cost is
     reclaimed at the next :func:`compact_index`, which rebuilds the
-    dirty shards' bitmaps from the surviving keys.
-
-    Overwrites its own batch dir — replay-convergent. Preconditions
-    match the serving-state deletes (`term_stats`/`ann_index`): one
+    dirty shards' bitmaps from the surviving keys. Precondition: one
     monotonic batch-id sequence shared by inserts and deletes."""
-    (
-        docs.select(F.col(id_col).cast("bigint").alias("_id"))
-        .distinct()
-        .withColumn("t", F.lit(int(batch_id)).cast("bigint"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(_deleted_dir(index_dir, batch_id))
+    state_plane.write_tombstones(
+        docs.select(F.col(id_col).cast("bigint").alias("_id")),
+        batch_id,
+        _marker_root(index_dir),
     )
-
-
-def _live_screen_markers(
-    spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
-) -> Optional[DataFrame]:
-    """Un-applied forget markers (``_id | t``): marker dirs strictly
-    above the base pointer (dirs at/below it were applied physically by
-    compaction and GC'd — a replayed folded dir is filtered here, the
-    ANN-tombstone liveness rule). ``before_batch`` excludes markers the
-    in-flight batch could not have seen on its original run, keeping
-    replay deterministic. None when the index has never forgotten."""
-    ids = _marker_ids(index_dir)
-    if not ids:
-        return None
-    ptr = _read_pointer(index_dir)
-    horizon = -1 if ptr is None else int(ptr)
-    live = [
-        t
-        for t in ids
-        if t > horizon and (before_batch is None or t < before_batch)
-    ]
-    if not live:
-        return None
-    frames = [
-        spark.read.schema(_MARKER_SCHEMA).parquet(_deleted_dir(index_dir, t))
-        for t in live
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def _apply_screen_markers(
-    tagged: list[tuple[int, DataFrame]], marks: Optional[DataFrame]
-) -> list[DataFrame]:
-    """Anti-join forget markers onto index frames with insert-order
-    semantics at dir granularity: a frame inserted at batch b loses the
-    ids of markers with t > b. The base frame ranks as b = pointer —
-    exact, because every base row was inserted at or below the fold
-    horizon and every LIVE marker sits strictly above it. The marker
-    set is the forget sliver — broadcast."""
-    if marks is None:
-        return [f for _, f in tagged]
-    out = []
-    for b, f in tagged:
-        m = marks.where(F.col("t") > F.lit(int(b))).select("_id")
-        out.append(f.join(F.broadcast(m), "_id", "left_anti"))
-    return out
-
-
-def _tagged_frames(
-    spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
-) -> tuple[list[tuple[int, DataFrame]], Optional[DataFrame]]:
-    """(insert-batch-tagged UNFILTERED index frames, live markers) —
-    the raw parts `_index_frames` composes; compaction also needs them
-    separately to find which shards a fold's markers actually dirty."""
-    ptr = _read_pointer(index_dir)
-    tagged: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        tagged.append(
-            (
-                int(ptr),
-                spark.read.schema(_INDEX_SCHEMA).parquet(
-                    os.path.join(index_dir, "base", f"v={ptr}")
-                ),
-            )
-        )
-    for i in _delta_ids(index_dir):
-        if ptr is not None and i <= ptr:
-            continue
-        if before_batch is not None and i >= before_batch:
-            continue
-        tagged.append(
-            (i, spark.read.schema(_INDEX_SCHEMA).parquet(_new_dir(index_dir, i)))
-        )
-    return tagged, _live_screen_markers(spark, index_dir, before_batch)
 
 
 def _index_frames(
     spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
 ) -> list[DataFrame]:
-    tagged, marks = _tagged_frames(spark, index_dir, before_batch)
-    return _apply_screen_markers(tagged, marks)
+    """The live index frames minus live forget markers, with the
+    state_plane insert-order rule at dir granularity. ``before_batch``
+    excludes the in-flight batch's own (possibly half-written) delta
+    and the markers its original run could not have seen, keeping
+    replay deterministic."""
+    return state_plane.apply_tombstones(
+        state_plane.live(
+            spark, index_dir, spark.read.schema(_INDEX_SCHEMA).parquet,
+            deltas=_NEW, before=before_batch,
+        ),
+        state_plane.live_tombstones(
+            spark, index_dir, _marker_root(index_dir), before=before_batch
+        ),
+        "_id",
+    )
 
 
 def _shard_params(expected_total_items: int, fpp: float) -> tuple[int, int]:
@@ -325,6 +241,21 @@ def _write_bloom_geometry(index_dir: str, sm_bits: int, sk: int) -> None:
     )
 
 
+def _set_bits(bits: np.ndarray, h1, h2, sm_bits: int, sk: int) -> None:
+    """OR the ``sk`` double-hashing probes of every (h1, h2) pair into
+    one shard's ``bits`` (the BloomFilter bit layout)."""
+    mask = np.int64(sm_bits - 1)
+    a = h1 & mask
+    b = h2 & mask
+    for i in range(sk):
+        idx = (a + np.int64(i) * b) & mask
+        np.bitwise_or.at(
+            bits,
+            idx >> np.int64(3),
+            (np.uint8(1) << (idx & np.int64(7)).astype(np.uint8)),
+        )
+
+
 def _shard_partials(df: DataFrame, sm_bits: int, sk: int) -> list:
     """Collected per-shard partial bitmaps of ``df``'s (key, _shard)
     rows: the hashed frame (20 B/row) is repartitioned BY SHARD first,
@@ -350,7 +281,6 @@ def _shard_partials(df: DataFrame, sm_bits: int, sk: int) -> list:
 
     def bitmapper(batches):
         acc: dict[int, np.ndarray] = {}
-        mask = np.int64(sm_bits - 1)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -360,15 +290,7 @@ def _shard_partials(df: DataFrame, sm_bits: int, sk: int) -> list:
             for s in np.unique(sh):
                 m = sh == s
                 bits = acc.setdefault(int(s), np.zeros(n_bytes, dtype=np.uint8))
-                a = h1[m] & mask
-                b = h2[m] & mask
-                for i in range(sk):
-                    idx = (a + np.int64(i) * b) & mask
-                    np.bitwise_or.at(
-                        bits,
-                        idx >> np.int64(3),
-                        (np.uint8(1) << (idx & np.int64(7)).astype(np.uint8)),
-                    )
+                _set_bits(bits, h1[m], h2[m], sm_bits, sk)
         for s, bits in acc.items():
             yield pd.DataFrame({"_s": [s], "bits": [bits.tobytes()]})
 
@@ -513,9 +435,7 @@ def _apply_shard_bits(
     if rebuild_shards:
         frames = _index_frames(spark, index_dir)
         if frames:
-            allkeys = frames[0]
-            for fr in frames[1:]:
-                allkeys = allkeys.unionByName(fr)
+            allkeys = state_plane.union(frames)
             rebuilt = _shard_bits(
                 allkeys.where(F.col("_shard").isin(rebuild_shards)), sm_bits, sk
             )
@@ -572,10 +492,7 @@ def flush_bitmap_updates(spark: SparkSession, deferred: list) -> None:
     try:
         if len(deferred) == 1:
             d = deferred[0]
-            _apply_shard_bits(
-                spark, d.index_dir, _shard_bits(d.keyed, d.sm_bits, d.sk),
-                d.sm_bits, d.sk,
-            )
+            _update_shard_bitmaps(spark, d.index_dir, d.keyed, d.sm_bits, d.sk)
             return
         tagged = None
         for i, d in enumerate(deferred):
@@ -605,7 +522,6 @@ def flush_bitmap_updates(spark: SparkSession, deferred: list) -> None:
                 sh = pdf["_shard"].to_numpy()
                 for p in np.unique(pl):
                     sm_bits, sk = geoms[int(p)]
-                    mask = np.int64(sm_bits - 1)
                     n_bytes = (sm_bits + 7) // 8
                     pm = pl == p
                     for s in np.unique(sh[pm]):
@@ -613,15 +529,7 @@ def flush_bitmap_updates(spark: SparkSession, deferred: list) -> None:
                         bits = acc.setdefault(
                             (int(p), int(s)), np.zeros(n_bytes, dtype=np.uint8)
                         )
-                        a = h1[m] & mask
-                        b = h2[m] & mask
-                        for i in range(sk):
-                            idx = (a + np.int64(i) * b) & mask
-                            np.bitwise_or.at(
-                                bits,
-                                idx >> np.int64(3),
-                                (np.uint8(1) << (idx & np.int64(7)).astype(np.uint8)),
-                            )
+                        _set_bits(bits, h1[m], h2[m], sm_bits, sk)
             for (p, s), bits in acc.items():
                 yield pd.DataFrame(
                     {"_p": [p], "_s": [s], "bits": [bits.tobytes()]}
@@ -662,6 +570,66 @@ def flush_bitmap_updates(spark: SparkSession, deferred: list) -> None:
                     pass
 
 
+def _screen_history(
+    spark: SparkSession,
+    index_dir: str,
+    firsts: DataFrame,
+    batch_id: int,
+    sm_bits: int,
+    sk: int,
+    expected_total_items: int,
+    fpp: float,
+    caches: list,
+    prune_by_candidates: bool = False,
+) -> tuple[DataFrame, DataFrame, Optional[DataFrame]]:
+    """The two-phase screen every key screen runs on its batch's
+    within-batch firsts (``_id, key, _shard, ...`` rows): bloom-NEGATIVE
+    rows are guaranteed new; bloom-positive candidates anti-join the
+    shard-pruned history. Returns ``(new, cand, matched)`` — the rows
+    whose key is not historical, the candidates, and the historical keys
+    among them (None without history, when every row is new). Frames it
+    persists go to ``caches`` for the caller to unpersist.
+    ``prune_by_candidates`` prunes history by the candidates' shards
+    (one more collect) instead of the whole batch's — for screens whose
+    many keys per document cover every shard."""
+    frames = _index_frames(spark, index_dir, before_batch=batch_id)
+    if not frames:
+        return firsts, firsts, None
+    # ONE shard-list collect per screen: the batch's full shard set
+    # prunes history just as correctly — a history row whose shard no
+    # batch key hashes into can never match a candidate key — at worst
+    # reading a few more _shard partitions than the bloom-positive
+    # subset would
+    shards = [r["_shard"] for r in firsts.select("_shard").distinct().collect()]
+    probe = _batch_probe_column(
+        index_dir, firsts, sm_bits, sk, expected_total_items, fpp,
+        shard_list=shards,
+    )
+    if probe is None:
+        negatives, cand = firsts.limit(0), firsts
+    else:
+        flagged = firsts.withColumn("_maybe", probe).persist()
+        caches.append(flagged)
+        negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
+        cand = flagged.where(F.col("_maybe")).drop("_maybe")
+        if prune_by_candidates:
+            shards = [r["_shard"] for r in cand.select("_shard").distinct().collect()]
+    # persisted: `matched` feeds both of the batch's writes — without the
+    # cache each write re-runs the pruned HISTORY scan, doubling the
+    # trigger's dominant IO
+    matched = (
+        state_plane.union(frames)
+        .where(F.col("_shard").isin(shards))
+        .join(F.broadcast(cand.select("key")), "key", "left_semi")
+        .select("key")
+        .distinct()
+        .persist()
+    )
+    caches.append(matched)
+    new = negatives.unionByName(cand.join(F.broadcast(matched), "key", "left_anti"))
+    return new, cand, matched
+
+
 def _keyed(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
     key = F.md5(F.encode(normalized_text(F.col(text_col)), "UTF-8"))
     return batch.select(
@@ -696,8 +664,7 @@ def process_batch(
 
     from pyspark.sql import Window
 
-    flagged = None  # assigned in the bloom branch; finally unpersists it
-    cached_matched = None  # assigned in the history branch; finally unpersists
+    caches: list = []  # the screen's persisted frames; finally unpersists
     keyed = _keyed(batch, text_col, id_col)
     null_rows = keyed.where(F.col("key").isNull())
     keyed = keyed.where(F.col("key").isNotNull())
@@ -722,54 +689,17 @@ def process_batch(
     )
 
     try:
-        frames = _index_frames(spark, index_dir, before_batch=batch_id)
-        if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
-            # ONE shard-list collect per screen (was two: the probe's
-            # internal distinct + a cand distinct): the batch's full
-            # shard set prunes history just as correctly — a history
-            # row whose shard no batch key hashes into can never match
-            # a candidate key — at worst reading a few more _shard
-            # partitions than the bloom-positive subset would
-            shards = [
-                r["_shard"] for r in keepers.select("_shard").distinct().collect()
-            ]
-            probe = _batch_probe_column(
-                index_dir, keepers, sm_bits, sk, expected_total_items, fpp,
-                shard_list=shards,
+        new_rows, cand, matched = _screen_history(
+            spark, index_dir, keepers, batch_id, sm_bits, sk,
+            expected_total_items, fpp, caches,
+        )
+        dups = internal_dups
+        if matched is not None:
+            dups = dups.unionByName(
+                cand.join(F.broadcast(matched), "key", "left_semi").select(
+                    "_id", "key", F.lit("vs_history").alias("dup_kind")
+                )
             )
-            if probe is not None:
-                flagged = keepers.withColumn("_maybe", probe).persist()
-                negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-                cand = flagged.where(F.col("_maybe")).drop("_maybe")
-            else:
-                flagged = None
-                negatives = keepers.limit(0)
-                cand = keepers
-            hist = hist.where(F.col("_shard").isin(shards))
-            # persisted: `matched` feeds BOTH the dups and the new-rows
-            # writes — without the cache each write re-runs the pruned
-            # HISTORY scan, doubling the trigger's dominant IO
-            matched = (
-                hist.join(F.broadcast(cand.select("key")), "key", "left_semi")
-                .select("key")
-                .distinct()
-                .persist()
-            )
-            cached_matched = matched
-            hist_dups = cand.join(F.broadcast(matched), "key", "left_semi").select(
-                "_id", "key", F.lit("vs_history").alias("dup_kind")
-            )
-            new_from_cand = cand.join(F.broadcast(matched), "key", "left_anti")
-            new_rows = negatives.unionByName(new_from_cand)
-            dups = internal_dups.unionByName(hist_dups)
-        else:
-            flagged = None
-            new_rows = keepers
-            dups = internal_dups
-
         new_rows = new_rows.unionByName(
             null_rows.select("_id", "key", "_shard")
         )
@@ -821,42 +751,8 @@ def process_batch(
         # the flush to recompute the batch window
         if defer_bitmaps is None:
             marked.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
-        if cached_matched is not None:
-            cached_matched.unpersist()
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
-):
-    """Start the incremental exact-dedup stream; returns the
-    StreamingQuery. New (first-seen) keys accumulate under ``_new``;
-    duplicate verdicts land under ``_dups/batch=<id>``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-            expected_total_items=expected_total_items,
-            fpp=fpp,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+        for c in caches:
+            c.unpersist()
 
 
 def read_unique_ids(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -864,10 +760,7 @@ def read_unique_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     frames = _index_frames(spark, index_dir)
     if not frames:
         raise FileNotFoundError(f"no exact-dedup index under {index_dir}")
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    return df.select(F.col("_id").alias("doc_id"), "key")
+    return state_plane.union(frames).select(F.col("_id").alias("doc_id"), "key")
 
 
 def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -880,9 +773,8 @@ def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
 def compact_index(
     spark: SparkSession, index_dir: str, upto_batch: Optional[int] = None
 ) -> Optional[int]:
-    """Fold _new deltas into a versioned shard-partitioned base behind an
-    atomically-flipped pointer — same crash-safety argument as
-    ``rollup.compact_rollup`` / ``dedup_index.compact_index``.
+    """Fold _new deltas into a versioned shard-partitioned base through
+    `state_plane.fold` (NULL-key passthrough rows fold verbatim).
 
     ``upto_batch``: fold only deltas with id STRICTLY below it. Pass the
     stream's last committed batch id + 1 (or the checkpoint's pending
@@ -894,12 +786,8 @@ def compact_index(
     the dup-verdict labels skew). With ``upto_batch=None`` every delta
     folds; that is safe only when no batch is awaiting replay.
 
-    Forget markers (:func:`delete_docs_from_screen`) in the fold window
-    are applied PHYSICALLY — ``_index_frames`` already anti-joins them
-    with insert-order semantics, so the folded base simply lacks the
-    forgotten rows — and their dirs GC'd; the pointer advances over
-    marker-only windows too (marker liveness keys off it). Markers at
-    or above ``upto_batch`` stay live and keep filtering at read.
+    Forget markers (:func:`delete_docs_from_screen`) below the horizon
+    apply physically and GC; later ones stay live and filter at read.
 
     Bloom hygiene (r11): shard bitmaps only ever GAIN bits between
     compactions (forget leaves them untouched — superset-safe), so
@@ -914,74 +802,46 @@ def compact_index(
     next batch's updater rebuilds it with the live geometry (the
     existing self-heal path). Either way correctness never moves; only
     the acceleration is restored."""
-    ids = _delta_ids(index_dir)
-    ptr = _read_pointer(index_dir)
-    pending = [
-        i
-        for i in ids
-        if (ptr is None or i > ptr)
-        and (upto_batch is None or i < upto_batch)
-    ]
-    mpending = [
-        t
-        for t in _marker_ids(index_dir)
-        if (ptr is None or t > ptr)
-        and (upto_batch is None or t < upto_batch)
-    ]
-    if not pending and not mpending:
-        return None
-    tagged, marks = _tagged_frames(spark, index_dir, before_batch=upto_batch)
-    frames = _apply_screen_markers(tagged, marks)
-    if not frames:
-        # marker-only activity on an index with no base and no data
-        # deltas: nothing to apply the markers to — leave them live
-        return None
-    dirty_shards: list[int] = []
-    if marks is not None:
-        # shards that lose at least one row to an applied marker, by the
-        # same insert-order rule the fold applies (marker t kills rows
-        # inserted strictly before t)
-        killed = None
-        for b, f in tagged:
-            m = marks.where(F.col("t") > F.lit(int(b))).select("_id")
-            hit = f.join(F.broadcast(m), "_id", "left_semi").select("_shard")
-            killed = hit if killed is None else killed.unionByName(hit)
-        dirty_shards = sorted(
-            r["_shard"] for r in killed.distinct().collect() if r["_shard"] is not None
+    dirty: list[int] = []
+
+    def merge(ranked, marks):
+        if marks is not None:
+            # shards that lose at least one row to an applied marker
+            killed = state_plane.apply_tombstones(ranked, marks, "_id", how="left_semi")
+            dirty.extend(
+                sorted(
+                    r["_shard"]
+                    for r in state_plane.union(k.select("_shard") for k in killed)
+                    .distinct()
+                    .collect()
+                    if r["_shard"] is not None
+                )
+            )
+        df = state_plane.union(state_plane.apply_tombstones(ranked, marks, "_id"))
+        # keys are unique across deltas by construction (a key admitted in
+        # batch i is history for batch j>i); min-id keeps the fold
+        # deterministic anyway. NULL-key passthrough rows fold verbatim —
+        # a groupBy would wrongly collapse them into one row.
+        nn = (
+            df.where(F.col("key").isNotNull())
+            .groupBy("key", "_shard")
+            .agg(F.min("_id").alias("_id"))
         )
-    new_v = max(pending + mpending)
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    # keys are unique across deltas by construction (a key admitted in
-    # batch i is history for batch j>i); min-id keeps the fold
-    # deterministic anyway. NULL-key passthrough rows fold verbatim —
-    # a groupBy would wrongly collapse them into one row.
-    nn = (
-        df.where(F.col("key").isNotNull())
-        .groupBy("key", "_shard")
-        .agg(F.min("_id").alias("_id"))
+        nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
+        return nn.unionByName(nulls).repartition("_shard").sortWithinPartitions("key")
+
+    new_v = state_plane.fold(
+        spark,
+        index_dir,
+        merge,
+        read=spark.read.schema(_INDEX_SCHEMA).parquet,
+        deltas=_NEW,
+        before=upto_batch,
+        marker_root=_marker_root(index_dir),
+        partition_by=("_shard",),
     )
-    nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
-    (
-        nn.unionByName(nulls)
-        .repartition("_shard")
-        .sortWithinPartitions("key")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(os.path.join(index_dir, "base", f"v={new_v}"))
-    )
-    _write_pointer(index_dir, new_v)
-    if dirty_shards:
-        _rebuild_dirty_bitmaps(spark, index_dir, new_v, dirty_shards)
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_new_dir(index_dir, i))
-    for t in _marker_ids(index_dir):
-        if t <= new_v:
-            state_io.remove_tree(_deleted_dir(index_dir, t))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(index_dir, "base", f"v={ptr}"))
+    if dirty:
+        _rebuild_dirty_bitmaps(spark, index_dir, new_v, dirty)
     return new_v
 
 
@@ -1006,7 +866,7 @@ def _rebuild_dirty_bitmaps(
     sm_bits, sk = geom
     survivors = (
         spark.read.schema(_INDEX_SCHEMA)
-        .parquet(os.path.join(index_dir, "base", f"v={base_v}"))
+        .parquet(state_plane.base_dir(index_dir, base_v))
         .where(F.col("_shard").isin(present))
     )
     rebuilt = _shard_bits(survivors, sm_bits, sk)

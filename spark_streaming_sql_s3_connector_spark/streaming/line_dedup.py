@@ -48,15 +48,15 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_sql_s3_connector_spark.streaming import exact_dedup, state_plane
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
     DeferredBitmapUpdate,
-    _batch_probe_column,
-    _index_frames,
     _new_dir,
+    _screen_history,
     _shard_params,
     _update_shard_bitmaps,
 )
@@ -117,8 +117,7 @@ def process_batch(
     sm_bits, sk = _shard_params(expected_total_items, fpp)
 
     lines = _lines(batch, text_col, id_col).persist()
-    flagged = None
-    cached_matched = None  # assigned in the history branch; finally unpersists
+    caches: list = []  # the screen's persisted frames
     handed_off = False
     try:
         # within-batch first occurrence per key (partial agg, windowless)
@@ -133,45 +132,10 @@ def process_batch(
             )
             .persist()
         )
-        frames = _index_frames(spark, index_dir, before_batch=batch_id)
-        if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
-            # one shard-list collect per screen (see exact_dedup): the
-            # batch's full shard set prunes history identically — keys
-            # outside these shards cannot match any candidate
-            shards = [
-                r["_shard"] for r in firsts.select("_shard").distinct().collect()
-            ]
-            probe = _batch_probe_column(
-                index_dir, firsts, sm_bits, sk, expected_total_items, fpp,
-                shard_list=shards,
-            )
-            if probe is not None:
-                flagged = firsts.withColumn("_maybe", probe).persist()
-                negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-                cand = flagged.where(F.col("_maybe")).drop("_maybe")
-            else:
-                negatives = firsts.limit(0)
-                cand = firsts
-            hist = hist.where(F.col("_shard").isin(shards))
-            # persisted: `matched` sits under BOTH the rebuilt-docs and
-            # the index-delta writes — without the cache each write
-            # re-runs the pruned HISTORY scan, doubling the trigger's
-            # dominant IO
-            matched = (
-                hist.join(F.broadcast(cand.select("key")), "key", "left_semi")
-                .select("key")
-                .distinct()
-                .persist()
-            )
-            cached_matched = matched
-            new_firsts = negatives.unionByName(
-                cand.join(F.broadcast(matched), "key", "left_anti")
-            )
-        else:
-            new_firsts = firsts
+        new_firsts = _screen_history(
+            spark, index_dir, firsts, batch_id, sm_bits, sk,
+            expected_total_items, fpp, caches,
+        )[0]
 
         # a line survives iff it IS the surviving first of its key
         kept = lines.join(
@@ -247,16 +211,13 @@ def process_batch(
             )
         if defer_writes is not None:
             handed_off = True
-            _flagged, _matched = flagged, cached_matched
 
             def _cleanup() -> None:
                 lines.unpersist()
                 if defer_bitmaps is None:
                     firsts.unpersist()
-                if _flagged is not None:
-                    _flagged.unpersist()
-                if _matched is not None:
-                    _matched.unpersist()
+                for c in caches:
+                    c.unpersist()
                 out.unpersist()
 
             return out, _cleanup
@@ -270,46 +231,14 @@ def process_batch(
             # deferred mode keeps `firsts` cached for the fused flush
             if defer_bitmaps is None:
                 firsts.unpersist()
-            if flagged is not None:
-                flagged.unpersist()
-            if cached_matched is not None:
-                cached_matched.unpersist()
+            for c in caches:
+                c.unpersist()
 
 
 def read_deduped_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     """(doc_id, deduped_text, n_kept_lines) across all processed batches."""
     root = os.path.join(index_dir, "_docs")
     return spark.read.parquet(root)
-
-
-def streaming_line_dedup(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
-):
-    """Start the incremental keep-first line dedup as a foreachBatch
-    stream; returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-            expected_total_items=expected_total_items,
-            fpp=fpp,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
@@ -328,13 +257,8 @@ def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
     only deltas STRICTLY below the newest delta id. After a clean stop
     (no replay possible) pass ``upto_batch=<newest id> + 1`` to fold
     everything."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
-        compact_index as _compact,
-    )
-
     if upto_batch is None:
-        ids = _delta_ids(index_dir)
+        ids = state_plane.delta_ids(index_dir, exact_dedup._NEW)
         if ids:
             upto_batch = max(ids)
-    return _compact(spark, index_dir, upto_batch=upto_batch)
+    return exact_dedup.compact_index(spark, index_dir, upto_batch=upto_batch)

@@ -18,10 +18,13 @@ is each shard's CURSOR (total tokens emitted so far). Per batch:
    same within-shard id order), then SHIFT each shard's offsets by its
    cursor and recompute ``seq_first``/``seq_last`` — integer `div`,
    identical arithmetic to the batch operator and its DuckDB oracle;
-3. write the batch's manifest under ``pack/batch=<id>`` and its
-   per-shard token totals under ``cursors/batch=<id>`` — both
-   OVERWRITE their own batch dir, so a foreachBatch replay converges
-   (the `streaming/rollup.py` exactly-once recipe).
+3. write the batch's manifest rows AND its per-shard token totals in
+   ONE partitioned write under ``pack/_deltas/batch=<id>``
+   (``plane=pack`` / ``plane=cursors``) — one write job per trigger,
+   and the dir OVERWRITES itself, so a foreachBatch replay converges
+   (the `streaming/state_plane.py` exactly-once recipe). A pre-fold
+   state's split layout (flat manifest delta + ``cursors/_deltas``)
+   still reads and folds.
 
 Law (tested, including through a real stream with a replayed batch):
 processing doc-id-range-ordered batches incrementally equals
@@ -43,93 +46,100 @@ append-only data, compacted only for file-count hygiene.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from spark_streaming_sql_s3_connector_spark.operators.packing import pack_concat
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming import state_io, state_plane
 
 _PACK = "pack"
 _CURSORS = "cursors"
+# the combined delta's partition column, and the cursor total column
+# that rides the same write — neither may be a caller keep_col
+_PLANE = "plane"
+_TOKS = "toks"
 
 # explicit schemas: a batch with zero survivors writes _SUCCESS-only
 # dirs, which schema inference rejects but a fixed schema reads empty
 _CURSOR_SCHEMA = "shard int, toks bigint"
 
+_delta_dir = state_plane.delta_dir
+
+
 # the manifest schema depends on the caller's id column, so it can't be
 # a module constant like _CURSOR_SCHEMA — it is persisted ONCE at the
-# first write and every later read (manifest reads AND the compaction
-# fold) uses it, so a zero-survivor batch's _SUCCESS-only pack dir
-# reads as empty instead of breaking schema inference
-_SCHEMA_FILE = "_schema.json"
-
-
-def _manifest_schema_path(pack_dir: str) -> str:
-    return os.path.join(pack_dir, _PACK, _SCHEMA_FILE)
-
-
+# first write (state_plane's schema sidecar) and every later read
+# (manifest reads AND the compaction fold) uses it
 def _read_manifest_schema(pack_dir: str) -> Optional[StructType]:
-    try:
-        raw = state_io.read_text(_manifest_schema_path(pack_dir))
-    except FileNotFoundError:
-        return None
-    return StructType.fromJson(json.loads(raw))
+    return state_plane.read_schema(os.path.join(pack_dir, _PACK))
 
 
 def _write_manifest_schema_once(pack_dir: str, schema: StructType) -> None:
-    # exclusive create: an existing schema wins (replay/restart convergent)
-    state_io.write_text_atomic(
-        _manifest_schema_path(pack_dir),
-        json.dumps(schema.jsonValue()),
-        overwrite=False,
-    )
+    state_plane.write_schema_once(os.path.join(pack_dir, _PACK), schema)
 
 
-def _manifest_reader(spark: SparkSession, pack_dir: str):
+def _read_plane(
+    spark: SparkSession, path: str, schema: Optional[StructType], plane: str
+) -> DataFrame:
+    """One dir's rows of ``plane``: the combined delta's ``plane=<plane>``
+    partition (the other partition is pruned). A manifest dir without
+    the partition level — a base, or a legacy flat delta — reads whole:
+    its ``plane`` column reads NULL. A pre-schema legacy state infers."""
+    if schema is None:
+        return spark.read.parquet(path)
+    tagged = StructType(schema.fields + [StructField(_PLANE, StringType())])
+    keep = F.col(_PLANE) == plane
+    if plane == _PACK:
+        keep = keep | F.col(_PLANE).isNull()
+    return spark.read.schema(tagged).parquet(path).where(keep).drop(_PLANE)
+
+
+def _manifest_read(spark: SparkSession, pack_dir: str):
     schema = _read_manifest_schema(pack_dir)
-    return spark.read.schema(schema) if schema is not None else spark.read
+    return lambda path: _read_plane(spark, path, schema, _PACK)
+
+
+def _combined_cursors(
+    spark: SparkSession, pack_dir: str, before: Optional[int]
+) -> list[state_plane.Ranked]:
+    """The ``plane=cursors`` partitions of the combined deltas above the
+    CURSOR pointer (the cursor fold runs first, so a shared dir below it
+    is already in the cursor base even when a crash left it un-GC'd)."""
+    pk = os.path.join(pack_dir, _PACK)
+    ids = state_plane.window(
+        state_plane.delta_ids(pk),
+        state_io.read_pointer(os.path.join(pack_dir, _CURSORS)),
+        before,
+    )
+    schema = StructType.fromDDL(_CURSOR_SCHEMA)
+    return [
+        (b, _read_plane(spark, _delta_dir(pk, b), schema, _CURSORS)) for b in ids
+    ]
+
+
+def _sum_cursors(df: DataFrame) -> DataFrame:
+    return df.groupBy("shard").agg(F.sum(_TOKS).alias(_TOKS))
 
 
 def _cursor_base(
     spark: SparkSession, pack_dir: str, before_batch: Optional[int]
 ) -> DataFrame:
     """Per-shard token cursors accumulated STRICTLY before
-    ``before_batch``: base (if compacted) + cursor deltas, summed.
-    Returns an empty frame on a fresh state."""
-    sub = os.path.join(pack_dir, _CURSORS)
-    ptr = _read_pointer(sub)
-    frames = []
-    if ptr is not None:
-        frames.append(
-            spark.read.schema(_CURSOR_SCHEMA).parquet(
-                os.path.join(sub, "base", f"v={ptr}")
-            )
-        )
-    for b in _delta_ids(sub):
-        if ptr is not None and b <= ptr:
-            continue
-        if before_batch is not None and b >= before_batch:
-            continue
-        frames.append(
-            spark.read.schema(_CURSOR_SCHEMA).parquet(_delta_dir(sub, b))
-        )
-    if not frames:
+    ``before_batch``: base (if compacted) + legacy and combined cursor
+    deltas, summed. Returns an empty frame on a fresh state."""
+    ranked = state_plane.live(
+        spark,
+        os.path.join(pack_dir, _CURSORS),
+        spark.read.schema(_CURSOR_SCHEMA).parquet,
+        before=before_batch,
+    ) + _combined_cursors(spark, pack_dir, before_batch)
+    if not ranked:
         return spark.createDataFrame([], _CURSOR_SCHEMA)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("shard").agg(F.sum("toks").alias("toks"))
+    return _sum_cursors(state_plane.union(f for _, f in ranked))
 
 
 def pack_batch_incremental(
@@ -153,12 +163,18 @@ def pack_batch_incremental(
     manifest rows (see ``pack_concat``) — the curation finalize folds
     its (lang, qscore) plane into the manifest this way, ONE delta
     write per trigger instead of two and a join-free
-    ``read_curated_pack``."""
+    ``read_curated_pack``. They must match the columns the state was
+    started with (a mismatch raises before anything is written)."""
+    layout = sorted({_PLANE, _TOKS} & set(keep_cols))
+    if layout:
+        raise ValueError(
+            f"keep_cols {layout} collide with the pack delta's layout "
+            f"columns {_PLANE!r}/{_TOKS!r}"
+        )
     spark = batch.sparkSession
-    # persisted: `local` feeds BOTH the manifest-delta and the cursor
-    # writes — without the cache the second write re-runs the pack's
-    # window shuffle (the same two-writes-one-frame rule as the dedup
-    # screens' matched frame)
+    # persisted: `local` feeds BOTH the manifest rows and the cursor
+    # totals of the one delta write — without the cache the write re-runs
+    # the pack's window shuffle per branch
     local = pack_concat(
         batch, id_col, capacity,
         text_col=text_col, token_col=token_col, num_shards=num_shards,
@@ -169,7 +185,7 @@ def pack_batch_incremental(
         local.join(F.broadcast(cursors), "shard", "left")
         .withColumn(
             "start_offset",
-            F.col("start_offset") + F.coalesce(F.col("toks"), F.lit(0)),
+            F.col("start_offset") + F.coalesce(F.col(_TOKS), F.lit(0)),
         )
         .select(
             F.col(id_col),
@@ -191,42 +207,63 @@ def pack_batch_incremental(
     try:
         # persist the manifest schema BEFORE the first delta lands so a
         # zero-survivor batch (whose dir holds only _SUCCESS) stays
-        # readable
-        _write_manifest_schema_once(pack_dir, shifted.schema)
-        shifted.write.mode("overwrite").parquet(
-            _delta_dir(os.path.join(pack_dir, _PACK), batch_id)
-        )
+        # readable; a continued state must keep its columns, or the next
+        # fold would silently drop the extra ones
+        persisted = _read_manifest_schema(pack_dir)
+        if persisted is None:
+            _write_manifest_schema_once(pack_dir, shifted.schema)
+        elif persisted.fieldNames() != shifted.columns:
+            raise ValueError(
+                f"pack state {pack_dir}: persisted manifest columns "
+                f"{persisted.fieldNames()} differ from this batch's "
+                f"{shifted.columns} — continue with the same id_col and "
+                "keep_cols, or start a new pack dir"
+            )
+        totals = _sum_cursors(
+            local.select("shard", F.col("n_tokens").alias(_TOKS))
+        ).coalesce(1)
         (
-            local.groupBy("shard")
-            .agg(F.sum("n_tokens").alias("toks"))
-            .coalesce(1)
+            shifted.withColumn(_PLANE, F.lit(_PACK))
+            .unionByName(
+                totals.withColumn(_PLANE, F.lit(_CURSORS)),
+                allowMissingColumns=True,
+            )
             .write.mode("overwrite")
-            .parquet(_delta_dir(os.path.join(pack_dir, _CURSORS), batch_id))
+            .partitionBy(_PLANE)
+            .parquet(_delta_dir(os.path.join(pack_dir, _PACK), batch_id))
         )
+        # a replay of a batch the split layout wrote: its cursor delta now
+        # rides the combined dir, so the legacy copy would double-count
+        state_io.remove_tree(_delta_dir(os.path.join(pack_dir, _CURSORS), batch_id))
     finally:
         local.unpersist()
+
+
+def read_manifest_batch(
+    spark: SparkSession, pack_dir: str, batch_id: int
+) -> DataFrame:
+    """The manifest rows one batch appended (its ``plane=pack`` rows;
+    a legacy flat delta reads whole) — the per-trigger gated plane the
+    curation finalize writes. The batch's delta must not be folded
+    yet."""
+    return _read_plane(
+        spark,
+        _delta_dir(os.path.join(pack_dir, _PACK), batch_id),
+        _read_manifest_schema(pack_dir),
+        _PACK,
+    )
 
 
 def read_packed_manifest(spark: SparkSession, pack_dir: str) -> DataFrame:
     """The accumulated per-doc manifest across every packed batch —
     identical schema and values to ``pack_concat`` over the union of
     the batches (the law the tests pin)."""
-    sub = os.path.join(pack_dir, _PACK)
-    ptr = _read_pointer(sub)
-    reader = _manifest_reader(spark, pack_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(
-            reader.parquet(os.path.join(sub, "base", f"v={ptr}"))
-        )
-    live = [b for b in _delta_ids(sub) if ptr is None or b > ptr]
-    frames.extend(reader.parquet(_delta_dir(sub, b)) for b in live)
-    if not frames:
-        raise FileNotFoundError(f"no packing state under {pack_dir}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return state_plane.read_live(
+        spark,
+        os.path.join(pack_dir, _PACK),
+        "packing state",
+        _manifest_read(spark, pack_dir),
+    )
 
 
 def streaming_pack(
@@ -260,49 +297,27 @@ def compact_pack_state(
     spark: SparkSession, pack_dir: str, upto_batch: Optional[int] = None
 ) -> None:
     """Fold committed deltas of both state tables into ``base/v=<n>``
-    behind atomic pointers (rollup discipline). Cursors fold to ONE
+    behind atomic pointers, on ONE horizon. Cursors fold to ONE
     ``num_shards``-row frame (sums are mergeable); the manifest folds
     by concatenation — pure file-count hygiene, rows never change.
     ``upto_batch`` defaults to everything; pass the last COMMITTED
     batch id when compacting beside a live stream (same replay guard
     as every compactor in this package)."""
-    for sub_name, fold_sum in ((_CURSORS, True), (_PACK, False)):
-        sub = os.path.join(pack_dir, sub_name)
-        ptr = _read_pointer(sub)
-        ids = [
-            b
-            for b in _delta_ids(sub)
-            if (ptr is None or b > ptr)
-            and (upto_batch is None or b <= upto_batch)
-        ]
-        if not ids:
-            continue
-
-        def _read(path):
-            r = (
-                spark.read.schema(_CURSOR_SCHEMA)
-                if fold_sum
-                else _manifest_reader(spark, pack_dir)
-            )
-            return r.parquet(path)
-
-        frames = []
-        if ptr is not None:
-            frames.append(_read(os.path.join(sub, "base", f"v={ptr}")))
-        frames.extend(_read(_delta_dir(sub, b)) for b in ids)
-        allf = frames[0]
-        for f in frames[1:]:
-            allf = allf.unionByName(f)
-        if fold_sum:
-            folded = allf.groupBy("shard").agg(F.sum("toks").alias("toks")).coalesce(1)
-        else:
-            folded = allf
-        new_v = max(ids)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(sub, "base", f"v={new_v}")
-        )
-        _write_pointer(sub, new_v)
-        for b in ids:
-            state_io.remove_tree(_delta_dir(sub, b))
-        if ptr is not None:
-            state_io.remove_tree(os.path.join(sub, "base", f"v={ptr}"))
+    before = None if upto_batch is None else upto_batch + 1
+    # cursors FIRST: the manifest fold GCs the shared delta dirs, whose
+    # cursor rows must already sit behind the cursor pointer
+    state_plane.fold(
+        spark,
+        os.path.join(pack_dir, _CURSORS),
+        state_plane.over_union(lambda df: _sum_cursors(df).coalesce(1)),
+        read=spark.read.schema(_CURSOR_SCHEMA).parquet,
+        before=before,
+        extra=_combined_cursors(spark, pack_dir, before),
+    )
+    state_plane.fold(
+        spark,
+        os.path.join(pack_dir, _PACK),
+        state_plane.over_union(lambda df: df),
+        read=_manifest_read(spark, pack_dir),
+        before=before,
+    )

@@ -51,11 +51,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_sql_s3_connector_spark.streaming import line_dedup
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
-    _batch_probe_column,
-    _index_frames,
     _new_dir,
+    _screen_history,
     _shard_params,
     _update_shard_bitmaps,
 )
@@ -111,8 +111,7 @@ def process_batch(
 
     base = _tokenized(batch, text_col, id_col).persist()
     occ = _gram_occurrences(base, k).persist()
-    cached_matched = None  # assigned in the history branch; finally unpersists
-    flagged = None
+    caches: list = []  # the screen's persisted frames; finally unpersists
     try:
         firsts = (
             occ.groupBy("key", "_shard")
@@ -125,38 +124,11 @@ def process_batch(
             )
             .persist()
         )
-        frames = _index_frames(spark, index_dir, before_batch=batch_id)
-        if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
-            probe = _batch_probe_column(
-                index_dir, firsts, sm_bits, sk, expected_total_items, fpp
-            )
-            if probe is not None:
-                flagged = firsts.withColumn("_maybe", probe).persist()
-                negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-                cand = flagged.where(F.col("_maybe")).drop("_maybe")
-            else:
-                negatives = firsts.limit(0)
-                cand = firsts
-            shards = [r["_shard"] for r in cand.select("_shard").distinct().collect()]
-            hist = hist.where(F.col("_shard").isin(shards))
-            # persisted: `matched` sits under BOTH the rebuilt-docs and
-            # the index-delta writes — without the cache each write
-            # re-runs the pruned HISTORY scan (the r12 line/exact fix)
-            matched = (
-                hist.join(F.broadcast(cand.select("key")), "key", "left_semi")
-                .select("key")
-                .distinct()
-                .persist()
-            )
-            cached_matched = matched
-            new_firsts = negatives.unionByName(
-                cand.join(F.broadcast(matched), "key", "left_anti")
-            )
-        else:
-            new_firsts = firsts
+        caches.append(firsts)
+        new_firsts = _screen_history(
+            spark, index_dir, firsts, batch_id, sm_bits, sk,
+            expected_total_items, fpp, caches, prune_by_candidates=True,
+        )[0]
 
         # an occurrence is a dup unless it IS a surviving first
         dup_occ = occ.join(
@@ -212,10 +184,8 @@ def process_batch(
     finally:
         base.unpersist()
         occ.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
-        if cached_matched is not None:
-            cached_matched.unpersist()
+        for c in caches:
+            c.unpersist()
 
 
 def read_deduped_docs(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -264,13 +234,4 @@ def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
     ``_docs/batch=N`` fully masked). ``upto_batch=None`` therefore
     derives the always-safe default — fold only deltas strictly below
     the newest delta id; pass ``<newest id> + 1`` after a clean stop."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
-        compact_index as _compact,
-    )
-
-    if upto_batch is None:
-        ids = _delta_ids(index_dir)
-        if ids:
-            upto_batch = max(ids)
-    return _compact(spark, index_dir, upto_batch=upto_batch)
+    return line_dedup.compact_index(spark, index_dir, upto_batch=upto_batch)

@@ -16,13 +16,10 @@ per-batch PARTIALS:
   losslessly through any number of folds — the only way DISTINCT stays
   correct incrementally
 
-Layout and exactly-once are the ``streaming/rollup.py`` recipe, reused
-verbatim (delta dir per batch id, overwrite-on-replay ⇒ idempotent;
-``base/v=<n>`` + atomic pointer; readers union base + live deltas):
-each micro-batch writes ONE wide row of partials, so the delta log
-grows by a few KB per trigger and ``compact_profile`` folds it to a
-single base row on any schedule. State lives in the table — no
-streaming state store, restart needs only the checkpoint.
+Layout and exactly-once are the `streaming/state_plane.py` cycle: each
+micro-batch overwrites ONE wide row of partials into its own delta dir,
+and ``compact_profile`` folds them to a single base row on any
+schedule. State lives in the table — no streaming state store.
 
 At 100 TB: the per-batch profile agg is the same single-scan partial
 aggregate as the batch profiler (map-side combine to one row per
@@ -39,13 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_streaming_sql_s3_connector_spark.operators.profile import _render
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming import state_plane
 
 _SKETCHABLE = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -108,7 +99,7 @@ def profile_batch(
     if not cols:
         raise ValueError("no columns to profile")
     _partials(batch, cols).write.mode("overwrite").parquet(
-        _delta_dir(sink_dir, batch_id)
+        state_plane.delta_dir(sink_dir, batch_id)
     )
 
 
@@ -145,17 +136,10 @@ def streaming_profile(
     return writer.start()
 
 
-def _live_partial_frames(spark: SparkSession, sink_dir: str) -> list[DataFrame]:
-    import os
-
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    return frames
+def _merge_all(allp: DataFrame) -> DataFrame:
+    return _merge_partials(
+        allp, sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
+    )
 
 
 def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
@@ -163,14 +147,8 @@ def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
     ``operators/profile.profile_table``: one row per column —
     ``col_name | n_rows | n_null | n_distinct | min_value | max_value``
     with portable-string min/max and HLL-estimated distincts."""
-    frames = _live_partial_frames(spark, sink_dir)
-    if not frames:
-        raise FileNotFoundError(f"no profile state under {sink_dir}")
-    allp = frames[0]
-    for f in frames[1:]:
-        allp = allp.unionByName(f)
-    cols = sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
-    one = _merge_partials(allp, cols)
+    one = _merge_all(state_plane.read_live(spark, sink_dir, "profile state"))
+    cols = sorted(c[4:] for c in one.columns if c.startswith("_nn_"))
     by_type = {f.name: f.dataType for f in one.schema.fields}
     entries = []
     for c in cols:
@@ -208,34 +186,11 @@ def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
 
 
 def compact_profile(spark: SparkSession, sink_dir: str) -> Optional[int]:
-    """Fold base + committed deltas into one base row and flip the
-    pointer (tmp+rename); delta dirs at/below the pointer become dead to
-    readers and are GC'd. Crash-safe at every step — an unflipped new
-    base is unreachable, un-GC'd dead deltas are filtered by the
-    pointer. Returns the new pointer, or None if nothing to fold."""
-    import os
-
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    frames = _live_partial_frames(spark, sink_dir)
-    allp = frames[0]
-    for f in frames[1:]:
-        allp = allp.unionByName(f)
-    cols = sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
-    folded = _merge_partials(allp, cols)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
+    """Fold base + committed deltas into one base row
+    (`state_plane.fold`). Returns the new pointer, or None if nothing
+    to fold."""
+    return state_plane.fold(
+        spark,
+        sink_dir,
+        state_plane.over_union(lambda df: _merge_all(df).coalesce(1)),
     )
-    _write_pointer(sink_dir, new_ptr)
-    # GC: dead deltas and superseded bases
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr

@@ -10,19 +10,11 @@ read time) and folds them incrementally.
 
 Exactly-once is the hard part: a ``foreachBatch`` that merges a batch's
 delta into the rollup in place double-counts when the batch replays after
-a crash between the sink write and the checkpoint commit. The layout here
-makes every write idempotent instead (the same recipe as the connector's
-metadata log — reference semantics `S3ConnectorSourceLog`, rebuilt in
-`state/metadata_log.py`):
-
-- ``_deltas/batch=<id>/`` — each micro-batch OVERWRITES its own delta
-  directory, keyed by Spark's monotonically-replayed batch id. A replayed
-  batch rewrites identical partials onto itself: converged, not doubled.
-- ``base/v=<n>/`` + ``_latest`` pointer — ``compact_rollup`` folds base +
-  deltas ``id <= n`` into a new base version, then atomically flips the
-  pointer (tmp+rename); deltas at-or-below the pointer are dead to
-  readers, so deleting them is garbage collection, safe at any moment.
-- readers union ``base[_latest]`` with deltas ``id > _latest`` and merge.
+a crash between the sink write and the checkpoint commit. Each batch
+instead OVERWRITES its own ``_deltas/batch=<id>`` dir (a replay converges,
+not doubles), readers merge the live base + deltas, and ``compact_rollup``
+folds them behind an atomic pointer — the `streaming/state_plane.py`
+cycle (the connector metadata log's recipe, `state/metadata_log.py`).
 
 Per-batch cost is O(batch); read cost is O(base + unfolded deltas), reset
 by compaction — both independent of table age. State lives in the table,
@@ -36,13 +28,12 @@ prunes to the queried time range, and compaction shuffles partial rows
 
 from __future__ import annotations
 
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.streaming import state_plane
 
 _PARTIALS = (
     ("_ca_cnt", lambda v: F.count(F.lit(1))),
@@ -71,19 +62,11 @@ def time_bucket(col, width_seconds: int):
 
 
 def _delta_dir(sink_dir: str, batch_id: int) -> str:
-    return os.path.join(sink_dir, "_deltas", f"batch={batch_id}")
-
-
-# pointer + listing IO lives in state_io (object-store capable since
-# r12); these aliases keep the pre-r12 import surface working — new
-# code should import state_io directly.
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-list_batch_ids = state_io.list_batch_ids
+    return state_plane.delta_dir(sink_dir, batch_id)
 
 
 def _delta_ids(sink_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(sink_dir, "_deltas"))
+    return state_plane.delta_ids(sink_dir)
 
 
 def _merge(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -135,27 +118,13 @@ def continuous_aggregate(
 
 
 def _live_frames(spark: SparkSession, sink_dir: str) -> list[DataFrame]:
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    frames.extend(
-        spark.read.parquet(_delta_dir(sink_dir, i))
-        for i in _delta_ids(sink_dir)
-        if ptr is None or i > ptr
-    )
-    return frames
+    return [f for _, f in state_plane.live(spark, sink_dir)]
 
 
 def read_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("event_type",)) -> DataFrame:
     """User-facing view: one row per (bucket, keys) with
     cnt / total / vmin / vmax / vavg, merged from base + unfolded deltas."""
-    frames = _live_frames(spark, sink_dir)
-    if not frames:
-        raise FileNotFoundError(f"no rollup data at {sink_dir}")
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
+    df = state_plane.read_live(spark, sink_dir, "rollup data")
     merged = _merge(df, list(keys))
     out = [
         "bucket",
@@ -172,32 +141,14 @@ def read_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("even
 
 
 def compact_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("event_type",)) -> Optional[int]:
-    """Fold base + all current deltas into a new base version and flip the
-    pointer. Crash-safe at every step: an unflipped new base is unread, a
-    flipped pointer makes folded deltas dead, and deleting dead deltas is
-    pure GC. Returns the new version (None if nothing to fold)."""
-    ids = _delta_ids(sink_dir)
-    ptr = _read_pointer(sink_dir)
-    pending = [i for i in ids if ptr is None or i > ptr]
-    if not pending:
-        return None
-    new_v = max(pending)
-    frames = _live_frames(spark, sink_dir)
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    (
-        _merge(df, list(keys))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(sink_dir, "base", f"v={new_v}"))
+    """Fold base + all current deltas into a new base version
+    (`state_plane.fold`, crash-safe at every step). Returns the new
+    version (None if nothing to fold)."""
+    return state_plane.fold(
+        spark,
+        sink_dir,
+        state_plane.over_union(
+            lambda df: _merge(df, list(keys)).repartition("bucket")
+        ),
+        partition_by=("bucket",),
     )
-    _write_pointer(sink_dir, new_v)
-    # GC: dead to every reader from here on
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_delta_dir(sink_dir, i))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(sink_dir, "base", f"v={ptr}"))
-    return new_v

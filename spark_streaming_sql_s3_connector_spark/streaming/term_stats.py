@@ -5,17 +5,14 @@ Batch BM25 computes its corpus statistics (N, Σdl, per-term document
 frequency) with an extra corpus scan per query. Over a STREAMING
 corpus those statistics are pure sums — every micro-batch contributes
 ``(term → +df)`` and ``(+n_docs, +Σdl)`` deltas — so we persist them
-in the rollup delta-log layout and BM25 serves from state: ONE corpus
-scan per query, statistics always current, no history re-read.
+as `streaming/state_plane.py` planes (replays overwrite their own
+delta dir and converge) and BM25 serves from state: ONE corpus scan
+per query, statistics always current, no history re-read.
 
 Correctness precondition (documented, tested): a document must be
 counted in exactly ONE batch — which is precisely what the upstream
 connector + streaming exact dedup guarantee in this repo's curation
-pipeline. Replays of a batch OVERWRITE that batch's own delta dir, so
-redelivery converges instead of double-counting (the
-``streaming/rollup.py`` exactly-once recipe, reused verbatim: delta
-dir per batch id, ``base/v=<n>`` + atomic pointer, readers union base
-+ live deltas).
+pipeline.
 
 At 100 TB: the per-batch work is one explode of the batch (not the
 corpus) + a term-keyed count with map-side combine; the delta log
@@ -34,13 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.functions.text import tokenize
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming import state_io, state_plane
 
 _TERMS = "terms"
 _CORPUS = "corpus"
@@ -108,10 +99,10 @@ def term_stats_batch(
         # as the curation screens' paired plane writes)
         writes = [
             lambda: terms.write.mode("overwrite").parquet(
-                _delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
+                state_plane.delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
             ),
             lambda: corpus.write.mode("overwrite").parquet(
-                _delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
+                state_plane.delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
             ),
         ]
         if with_postings:
@@ -130,7 +121,7 @@ def term_stats_batch(
             )
             writes.append(
                 lambda: postings.write.mode("overwrite").parquet(
-                    _delta_dir(os.path.join(sink_dir, _POSTINGS), batch_id)
+                    state_plane.delta_dir(os.path.join(sink_dir, _POSTINGS), batch_id)
                 )
             )
         run_concurrently(*writes)
@@ -152,10 +143,9 @@ def delete_docs_from_term_stats(
     curation flow has them in hand at drop time): df and corpus totals
     get this batch's NEGATED deltas (order-free sums — any interleaving
     of inserts and deletes nets to the surviving corpus's exact stats,
-    law-tested), and an id-keyed marker lands under
-    ``deleted/batch=<batch_id>`` killing posting rows INSERTED strictly
-    before it (ANN tombstone ordering: a later re-insert serves again).
-    Everything overwrites its own batch dir — replay-convergent.
+    law-tested), and a `state_plane` tombstone under
+    ``deleted/_deltas/batch=<batch_id>`` kills posting rows inserted
+    before it (a later re-insert serves again). Replay-convergent.
     Precondition: inserts and deletes share one monotonic batch-id
     sequence, and a doc is deleted at most once per life (the same
     exactly-once contract the inserts already carry)."""
@@ -170,18 +160,13 @@ def delete_docs_from_term_stats(
         (-F.coalesce(F.sum(F.size(toks)), F.lit(0))).cast("bigint").alias("sum_dl"),
     )
     terms.write.mode("overwrite").parquet(
-        _delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
+        state_plane.delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
     )
     corpus.write.mode("overwrite").parquet(
-        _delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
+        state_plane.delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
     )
-    (
-        docs.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("t", F.lit(int(batch_id)).cast("long"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(_delta_dir(os.path.join(sink_dir, _DELETED), batch_id))
+    state_plane.write_tombstones(
+        docs.select(F.col(id_col).alias("id")), batch_id, _marker_root(sink_dir)
     )
 
 
@@ -218,24 +203,15 @@ def streaming_term_stats(
 def term_stats_exist(sink_dir: str) -> bool:
     """True iff ``sink_dir`` holds servable term-stats state (a base
     pointer or at least one live delta for the corpus totals)."""
-    sub = os.path.join(sink_dir, _CORPUS)
-    return _read_pointer(sub) is not None or bool(_delta_ids(sub))
+    return bool(state_plane.live_paths(os.path.join(sink_dir, _CORPUS)))
 
 
-def _live(spark: SparkSession, subdir: str) -> list[DataFrame]:
-    ptr = _read_pointer(subdir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(subdir, "base", f"v={ptr}")))
-    for bid in _delta_ids(subdir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(subdir, bid)))
-    if not frames:
-        raise FileNotFoundError(f"no term-stats state under {subdir}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+def _live(spark: SparkSession, subdir: str) -> DataFrame:
+    return state_plane.read_live(spark, subdir, "term-stats state")
+
+
+def _marker_root(sink_dir: str) -> str:
+    return state_plane.delta_root(os.path.join(sink_dir, _DELETED))
 
 
 def read_term_stats(
@@ -252,151 +228,109 @@ def read_term_stats(
 
 def read_corpus_stats(spark: SparkSession, sink_dir: str) -> DataFrame:
     """Current corpus totals: one row ``n_docs | sum_dl``."""
-    allc = _live(spark, os.path.join(sink_dir, _CORPUS))
-    return allc.agg(
+    return _sum_corpus(_live(spark, os.path.join(sink_dir, _CORPUS)))
+
+
+def _sum_corpus(df: DataFrame) -> DataFrame:
+    return df.agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("sum_dl").cast("bigint").alias("sum_dl"),
     )
 
 
 def _live_delete_markers(spark: SparkSession, sink_dir: str) -> Optional[DataFrame]:
-    """Un-applied document-delete markers (``id | t``): every marker dir
-    at/above the postings fold horizon (dirs below it were applied
-    physically by compaction and GC'd; a replayed folded dir is
-    filtered here, exactly like the ANN tombstone liveness rule).
-    None when the state has never seen a delete."""
-    sub = os.path.join(sink_dir, _DELETED)
-    ids = _delta_ids(sub)
-    if not ids:
-        return None
-    ptr = _read_pointer(os.path.join(sink_dir, _POSTINGS))
-    horizon = -1 if ptr is None else int(ptr)
-    live = [b for b in ids if b > horizon]
-    if not live:
-        return None
-    frames = [spark.read.parquet(_delta_dir(sub, b)) for b in live]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    """Un-applied document-delete markers (``id | t``) above the
+    postings fold horizon; None when the state has never seen a
+    delete."""
+    return state_plane.live_tombstones(
+        spark, os.path.join(sink_dir, _POSTINGS), _marker_root(sink_dir),
+        schema=None,
+    )
 
 
 def _apply_markers(posts: DataFrame, marks: Optional[DataFrame]) -> DataFrame:
-    """Anti-join delete markers onto posting rows with insert-order
-    semantics: marker t kills rows with b < t (pre-`b` rows from a
-    legacy layout count as oldest). The marker set is the delete sliver
-    — broadcast."""
-    if marks is None:
-        return posts
-    b_ord = (
-        F.col("b") if "b" in posts.columns else F.lit(-1).cast("long")
-    )
-    m = marks.select(F.col("id").alias("_did"), F.col("t").alias("_dt"))
-    return posts.join(
-        F.broadcast(m),
-        (posts["id"] == F.col("_did")) & (b_ord < F.col("_dt")),
-        "left_anti",
-    )
+    """Marker t kills posting rows with insert order ``b < t`` (rows of
+    a legacy layout without ``b`` rank as oldest)."""
+    return state_plane.apply_tombstones(
+        [(-1, posts)], marks, "id", mark_id="id", row_rank="b"
+    )[0]
 
 
 def compact_term_stats(
     spark: SparkSession, sink_dir: str, upto_batch: Optional[int] = None
 ) -> None:
-    """Fold committed delta dirs into ``base/v=<n>`` for both state
-    tables (atomic pointer flip; correctness never depends on when this
-    runs). ``upto_batch`` defaults to the highest delta present — pass
-    the last COMMITTED batch id when compacting a live stream, exactly
-    as ``streaming/exact_dedup.compact_index`` documents. Delete
-    markers at/below the postings fold horizon are applied PHYSICALLY
-    to the folded postings (rows keep their insert order ``b``, so the
-    anti-join is exact) and their dirs GC'd; markers above the horizon
-    stay live and keep filtering at read."""
-    for sub, keys in ((_TERMS, ["term"]), (_CORPUS, []), (_POSTINGS, None)):
-        subdir = os.path.join(sink_dir, sub)
-        if sub == _POSTINGS and not state_io.is_dir(subdir):
-            continue  # postings are opt-in state
-        ptr = _read_pointer(subdir)
-        ids = [
-            b
-            for b in _delta_ids(subdir)
-            if (ptr is None or b > ptr)
-            and (upto_batch is None or b <= upto_batch)
-        ]
-        if sub == _POSTINGS:
-            mark_sub = os.path.join(sink_dir, _DELETED)
-            mark_ids = [
-                b
-                for b in _delta_ids(mark_sub)
-                if (ptr is None or b > ptr)
-                and (upto_batch is None or b <= upto_batch)
-            ]
-        else:
-            mark_ids = []
-        if not ids and not mark_ids:
-            continue
-        frames = []
-        if ptr is not None:
-            frames.append(
-                spark.read.parquet(os.path.join(subdir, "base", f"v={ptr}"))
+    """Fold committed deltas of every state table through
+    `state_plane.fold` (correctness never depends on when this runs).
+    ``upto_batch`` (inclusive) defaults to everything — pass the last
+    COMMITTED batch id when compacting a live stream. Delete markers
+    at/below the horizon apply physically to the folded postings (rows
+    keep their insert order ``b``, so the anti-join is exact); later
+    ones stay live and filter at read."""
+    before = None if upto_batch is None else upto_batch + 1
+    # deletes net terms to df=0 — drop them from the base
+    state_plane.fold(
+        spark,
+        os.path.join(sink_dir, _TERMS),
+        state_plane.over_union(
+            lambda df: df.groupBy("term")
+            .agg(F.sum("df").alias("df"))
+            .where(F.col("df") != 0)
+        ),
+        before=before,
+    )
+    state_plane.fold(
+        spark,
+        os.path.join(sink_dir, _CORPUS),
+        state_plane.over_union(_sum_corpus),
+        before=before,
+    )
+    postings = os.path.join(sink_dir, _POSTINGS)
+    if state_io.is_dir(postings):  # postings are opt-in state
+        # each (term, doc) pair lives in exactly one batch (the
+        # exactly-once precondition above), so postings need no merge —
+        # the fold is file-count hygiene in the pruning layout plus the
+        # physical application of the markers it folds
+        state_plane.fold(
+            spark,
+            postings,
+            lambda ranked, marks: _apply_markers(
+                state_plane.union(f for _, f in ranked), marks
             )
-        frames.extend(spark.read.parquet(_delta_dir(subdir, b)) for b in ids)
-        if not frames:
-            # marker-only window over a postings dir with no base and no
-            # in-window postings deltas: nothing to fold the markers
-            # against — leave them live (they keep filtering at read)
-            # rather than indexing into an empty frame list
-            continue
-        allf = frames[0]
-        for f in frames[1:]:
-            allf = allf.unionByName(f)
-        if keys:
-            # deletes net terms to df=0 — drop them from the base
-            folded = allf.groupBy(*keys).agg(F.sum("df").alias("df")).where(
-                F.col("df") != 0
-            )
-        elif sub == _POSTINGS:
-            # each (term, doc) pair lives in exactly one batch (the
-            # exactly-once precondition above), so postings need no
-            # fold — compaction is file-count hygiene in the pruning
-            # layout, plus the physical application of the delete
-            # markers being folded (rows keep their insert order `b`)
-            if mark_ids:
-                mframes = [
-                    spark.read.parquet(_delta_dir(mark_sub, b))
-                    for b in mark_ids
-                ]
-                marks = mframes[0]
-                for f in mframes[1:]:
-                    marks = marks.unionByName(f)
-                allf = _apply_markers(allf, marks)
-            folded = allf.repartition(
-                _POSTINGS_FILES, "term"
-            ).sortWithinPartitions("term")
-        else:
-            folded = allf.agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-            )
-        # the postings horizon advances over APPLIED markers too, so a
-        # delete-only window still flips the pointer (marker liveness
-        # keys off it) and GCs the marker dirs
-        new_v = max(ids + mark_ids)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(subdir, "base", f"v={new_v}")
+            .repartition(_POSTINGS_FILES, "term")
+            .sortWithinPartitions("term"),
+            before=before,
+            marker_root=_marker_root(sink_dir),
+            marker_schema=None,
         )
-        _write_pointer(subdir, new_v)
-        for b in ids:
-            state_io.remove_tree(_delta_dir(subdir, b))
-        for b in mark_ids:
-            state_io.remove_tree(_delta_dir(mark_sub, b))
-        # GC superseded base versions (dead once the pointer flipped) —
-        # without this every fold leaves its predecessor behind and the
-        # version count grows unbounded over a long-running stream
-        # (list_versions tolerates stray names, like _marker_ids/_delta_ids)
-        base_root = os.path.join(subdir, "base")
-        for v in state_io.list_versions(base_root):
-            if v != new_v:
-                state_io.remove_tree(os.path.join(base_root, f"v={v}"))
+
+
+def _query_stats(spark: SparkSession, sink_dir: str, query_terms: Sequence[str]):
+    """(sorted distinct terms, {term: df}, n_docs, avgdl Column) for one
+    query. The two driver-side stats reads (term df slice + 1-row corpus
+    totals) union into ONE Spark job — serving latency is job count
+    locally, and both relations are broadcast-scale by construction."""
+    terms = sorted(set(query_terms))
+    if not terms:
+        raise ValueError("query_terms must be non-empty")
+    if any(t is None or t == "" or t != t.strip().lower() for t in terms):
+        raise ValueError("query_terms must be lowercase and stripped")
+    stats = read_term_stats(spark, sink_dir, terms).select(
+        "term",
+        F.col("df").cast("long").alias("a"),
+        F.lit(None).cast("long").alias("b"),
+    ).unionByName(
+        read_corpus_stats(spark, sink_dir).select(
+            F.lit(None).cast("string").alias("term"),
+            F.col("n_docs").alias("a"),
+            F.col("sum_dl").alias("b"),
+        )
+    ).collect()
+    dfreq = {r.term: int(r.a) for r in stats if r.term is not None}
+    tot = next(r for r in stats if r.term is None)
+    n_docs, sum_dl = int(tot.a), int(tot.b)
+    if n_docs == 0:
+        raise ValueError("term-stats state is empty")
+    return terms, dfreq, n_docs, F.lit(float(sum_dl)) / F.lit(float(n_docs))
 
 
 def bm25_search_indexed(
@@ -420,31 +354,7 @@ def bm25_search_indexed(
     )
 
     spark = corpus.sparkSession
-    terms = sorted(set(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    if any(t is None or t == "" or t != t.strip().lower() for t in terms):
-        raise ValueError("query_terms must be lowercase and stripped")
-    # the two driver-side stats reads (term df slice + 1-row corpus
-    # totals) union into ONE Spark job — serving latency is job count
-    # locally, and both relations are broadcast-scale by construction
-    stats = read_term_stats(spark, sink_dir, terms).select(
-        "term",
-        F.col("df").cast("long").alias("a"),
-        F.lit(None).cast("long").alias("b"),
-    ).unionByName(
-        read_corpus_stats(spark, sink_dir).select(
-            F.lit(None).cast("string").alias("term"),
-            F.col("n_docs").alias("a"),
-            F.col("sum_dl").alias("b"),
-        )
-    ).collect()
-    dfreq = {r.term: int(r.a) for r in stats if r.term is not None}
-    tot = next(r for r in stats if r.term is None)
-    n_docs, sum_dl = int(tot.a), int(tot.b)
-    if n_docs == 0:
-        raise ValueError("term-stats state is empty")
-    avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
+    terms, dfreq, n_docs, avgdl = _query_stats(spark, sink_dir, query_terms)
     toks = tokenize(F.lower(F.col(text_col)))
 
     def _count_of(term: str):
@@ -607,8 +517,7 @@ def bm25_search_postings_batch(
 
 def postings_exist(sink_dir: str) -> bool:
     """True iff the state carries the opt-in postings table."""
-    sub = os.path.join(sink_dir, _POSTINGS)
-    return _read_pointer(sub) is not None or bool(_delta_ids(sub))
+    return bool(state_plane.live_paths(os.path.join(sink_dir, _POSTINGS)))
 
 
 def bm25_search_postings(
@@ -634,31 +543,7 @@ def bm25_search_postings(
         _bm25_contrib,
     )
 
-    terms = sorted(set(query_terms))
-    if not terms:
-        raise ValueError("query_terms must be non-empty")
-    if any(t is None or t == "" or t != t.strip().lower() for t in terms):
-        raise ValueError("query_terms must be lowercase and stripped")
-    # the two driver-side stats reads (term df slice + 1-row corpus
-    # totals) union into ONE Spark job — serving latency is job count
-    # locally, and both relations are broadcast-scale by construction
-    stats = read_term_stats(spark, sink_dir, terms).select(
-        "term",
-        F.col("df").cast("long").alias("a"),
-        F.lit(None).cast("long").alias("b"),
-    ).unionByName(
-        read_corpus_stats(spark, sink_dir).select(
-            F.lit(None).cast("string").alias("term"),
-            F.col("n_docs").alias("a"),
-            F.col("sum_dl").alias("b"),
-        )
-    ).collect()
-    dfreq = {r.term: int(r.a) for r in stats if r.term is not None}
-    tot = next(r for r in stats if r.term is None)
-    n_docs, sum_dl = int(tot.a), int(tot.b)
-    if n_docs == 0:
-        raise ValueError("term-stats state is empty")
-    avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
+    terms, dfreq, n_docs, avgdl = _query_stats(spark, sink_dir, query_terms)
     live = [t for t in terms if dfreq.get(t, 0) > 0]
     posts = _apply_markers(
         _live(spark, os.path.join(sink_dir, _POSTINGS)).where(

@@ -1,32 +1,38 @@
 """One maintenance entry point for EVERY persisted state plane.
 
-The package accumulates delta-log state in seven layouts — rollup /
+The package keeps its delta-log state in a handful of layouts — rollup /
 profile / drift-count / embedding-moment sinks (``_deltas`` + pointer),
 BM25 term stats (``terms``/``corpus``/``postings`` subdirs), the
-incremental packing manifest (``pack``/``cursors``), the dedup
-screening indexes (``_new`` key dirs), the MinHash band index
-(``_bands``), and the IVF-PQ ANN index (``quantizers.json``) — each
-with its own compactor and GC. Correct, but an operator running a
-100 TB pipeline should not need to know seven maintenance calls and
-their per-plane replay guards: this module walks a state root,
+incremental packing manifest (``pack``, plus ``cursors`` once folded),
+the dedup screening indexes (``_new`` key dirs), the MinHash band index
+(``_bands``), the self-refreshing ANN lifecycle root, and the IVF-PQ ANN
+index (``quantizers.json``). Every compactor but the ANN index's folds
+through the one shared cycle in ``streaming/state_plane.py``. An
+operator running a 100 TB pipeline should not need to know each
+compactor and its replay guard: this module walks a state root,
 CLASSIFIES each plane by its on-disk signature (layout markers first,
-then the delta schema for the ``_deltas`` family), and dispatches to
-the right compactor with its always-safe default — the serving-plane
-analog of the source metadata log's bounded self-maintenance
-(reference: RocksDBS3SourceLog.scala:416-460, where one maintenance
-path both folds and GCs).
+then the delta schema for the ``_deltas`` family), and runs the kind's
+compactor from one kind→compactor table with its always-safe default —
+the serving-plane analog of the source metadata log's bounded
+self-maintenance (reference: RocksDBS3SourceLog.scala:416-460, where one
+maintenance path both folds and GCs).
 
 Classification rules (checked in order, first match wins, matched
 subtrees are not descended into):
 
+- ``index/`` + ``vectors/`` + ``drift_state/`` → ``ann_lifecycle``: the
+  index compaction, the landed-vector fold
+  (``ann_lifecycle.fold_landed_vectors``) and the moments fold
 - ``quantizers.json``            → ``operators/ann_index.compact_ann_index``
 - ``_bands/``                    → ``streaming/dedup_index.compact_index``
 - ``_new/``                      → ``streaming/exact_dedup.compact_index``
-  with the strictly-below-newest-delta guard (the line/passage default:
-  the newest delta is the only batch a restart can replay, and folding
-  it would corrupt a replay's ``_docs`` rewrite)
+- both screens default to the strictly-below-newest-delta-or-marker
+  guard (the newest write is the only batch a restart can replay, and
+  folding a line/passage delta would corrupt a replay's ``_docs``
+  rewrite)
 - ``terms/`` + ``corpus/``       → ``streaming/term_stats.compact_term_stats``
-- ``pack/`` + ``cursors/``       → ``streaming/packing_state.compact_pack_state``
+- ``pack/`` + (``cursors/`` or ``pack/_schema.json``)
+                                 → ``streaming/packing_state.compact_pack_state``
 - ``_deltas/`` with a delta schema of:
     - ``_n_rows`` + ``_nn_*``    → ``streaming/profile.compact_profile``
     - exactly ``bucket, n``      → ``streaming/drift.compact_drift_counts``
@@ -38,10 +44,10 @@ subtrees are not descended into):
 
 ``upto_batch`` (optional) passes through to every compactor that takes
 a fold horizon — hand it the last COMMITTED batch id when vacuuming
-beside live streams, exactly as each compactor documents. Compactors
-GC their own superseded versions, so after a vacuum each plane holds
-ONE base version + only post-horizon deltas (the bounded-version law
-the tests pin over a 10-batch lifecycle).
+beside live streams, exactly as each compactor documents. Every fold
+GCs its superseded versions, so after a vacuum each plane holds ONE
+base version + only post-horizon deltas (the bounded-version law the
+tests pin over a 10-batch lifecycle).
 
 Returns a report (one dict per plane found: path, plane, result) so
 callers can log what a maintenance cycle actually did.
@@ -54,7 +60,21 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
+    compact_ann_index,
+)
+from spark_streaming_sql_s3_connector_spark.streaming import (
+    ann_lifecycle,
+    dedup_index,
+    drift,
+    exact_dedup,
+    packing_state,
+    profile,
+    rollup,
+    state_io,
+    state_plane,
+    term_stats,
+)
 
 
 def _delta_schema_cols(spark: SparkSession, deltas_root: str) -> Optional[set]:
@@ -110,7 +130,9 @@ def classify_plane(spark: SparkSession, d: str) -> Optional[str]:
         return "key_screen"
     if "terms" in names and "corpus" in names:
         return "term_stats"
-    if "pack" in names and "cursors" in names:
+    if "pack" in names and (
+        "cursors" in names or state_io.exists(os.path.join(d, "pack", "_schema.json"))
+    ):
         return "packing"
     if "_deltas" in names:
         return _classify_deltas(spark, d) or "unknown_deltas"
@@ -136,162 +158,86 @@ def walk_planes(spark: SparkSession, state_root: str):
                 stack.append(p)
 
 
-def _vacuum_plane(
-    spark: SparkSession, d: str, kind: str, upto_batch: Optional[int]
-) -> dict:
-    """Dispatch ONE classified plane to its compactor. The kind comes
-    from :func:`classify_plane` — the single classification table both
-    maintenance and delete-routing share."""
-    if kind == "ann_index":
-        from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-            compact_ann_index,
-        )
+def _screen_horizon(d: str, deltas: str, upto_batch: Optional[int]):
+    """The screens' safe default beside a live stream: never fold the
+    newest delta OR forget marker — the only batch a restart could
+    replay (marker-only windows included; folding a replayable line or
+    passage delta would corrupt the replay's ``_docs`` rewrite)."""
+    if upto_batch is not None:
+        return upto_batch
+    ids = state_plane.delta_ids(d, deltas) + state_io.list_batch_ids(
+        exact_dedup._marker_root(d)
+    )
+    return max(ids) if ids else None
 
-        return {
-            "path": d,
-            "plane": kind,
-            "result": compact_ann_index(spark, d, upto_batch=upto_batch),
-        }
-    if kind == "ann_lifecycle":
-        from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-            compact_ann_index,
-        )
-        from spark_streaming_sql_s3_connector_spark.streaming.ann_lifecycle import (
-            _vectors_dir,
-            fold_landed_vectors,
-        )
-        from spark_streaming_sql_s3_connector_spark.streaming.drift import (
-            compact_embedding_moments,
-        )
 
-        if upto_batch is None:
-            # safe default beside a live stream: never fold the newest
-            # vector landing — the only trigger a restart could replay
-            # (vectors land FIRST in a trigger, so their newest id is
-            # the lifecycle's newest write)
-            ids = state_io.list_batch_ids(_vectors_dir(d))
-            horizon = max(ids) - 1 if ids else None
-            fold = fold_landed_vectors(spark, d, upto_batch=horizon) if (
-                horizon is not None
-                or state_io.read_pointer(_vectors_dir(d)) is None
-            ) else None
-            idx = compact_ann_index(
-                spark, os.path.join(d, "index"), upto_batch=max(ids) if ids else None
-            )
-        else:
-            fold = fold_landed_vectors(spark, d, upto_batch=upto_batch)
-            idx = compact_ann_index(
-                spark, os.path.join(d, "index"), upto_batch=upto_batch + 1
-            )
-        moments = compact_embedding_moments(spark, os.path.join(d, "moments"))
-        return {
-            "path": d,
-            "plane": kind,
-            "result": {"index": idx, "vectors": fold, "moments": moments},
-        }
-    if kind == "minhash_bands":
-        from spark_streaming_sql_s3_connector_spark.streaming.dedup_index import (
-            _band_delta_ids,
-            compact_index,
+def _ann_lifecycle(spark: SparkSession, d: str, upto_batch: Optional[int]) -> dict:
+    """A lifecycle root's three planes on their own replay horizons."""
+    if upto_batch is None:
+        # never fold the newest vector landing — the only trigger a
+        # restart could replay (vectors land FIRST in a trigger, so
+        # their newest id is the lifecycle's newest write)
+        ids = state_plane.delta_ids(ann_lifecycle._vectors_dir(d), "")
+        fold = ann_lifecycle.fold_landed_vectors(
+            spark, d, upto_batch=max(ids) - 1 if ids else None
         )
-        from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-            _marker_ids,
-        )
+        idx_upto = max(ids) if ids else None
+    else:
+        fold = ann_lifecycle.fold_landed_vectors(spark, d, upto_batch=upto_batch)
+        idx_upto = upto_batch + 1
+    return {
+        "index": compact_ann_index(
+            spark, os.path.join(d, "index"), upto_batch=idx_upto
+        ),
+        "vectors": fold,
+        "moments": drift.compact_embedding_moments(
+            spark, os.path.join(d, "moments")
+        ),
+    }
 
-        if upto_batch is None:
-            # same safe default as the key screens: never fold the
-            # newest delta OR forget marker — the only batch a live
-            # stream could still be writing or a restart could replay
-            # (a marker-only window's newest write is the marker)
-            ids = _band_delta_ids(d) + _marker_ids(d)
-            horizon = max(ids) if ids else None
-        else:
-            horizon = upto_batch
-        return {
-            "path": d,
-            "plane": kind,
-            "result": compact_index(spark, d, upto_batch=horizon),
-        }
-    if kind == "key_screen":
-        from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-            _delta_ids,
-            _marker_ids,
-            compact_index,
-        )
 
-        if upto_batch is None:
-            # the line/passage safe default: never fold the newest
-            # delta OR forget marker — the only batch a restart could
-            # replay (marker-only windows included)
-            ids = _delta_ids(d) + _marker_ids(d)
-            horizon = max(ids) if ids else None
-        else:
-            horizon = upto_batch
-        return {
-            "path": d,
-            "plane": kind,
-            "result": compact_index(spark, d, upto_batch=horizon),
-        }
-    if kind == "term_stats":
-        from spark_streaming_sql_s3_connector_spark.streaming.term_stats import (
-            compact_term_stats,
-        )
+def _rollup(spark: SparkSession, d: str, upto_batch: Optional[int]):
+    cols = _delta_schema_cols(spark, os.path.join(d, "_deltas"))
+    keys = sorted(c for c in cols if c != "bucket" and not c.startswith("_ca_"))
+    return rollup.compact_rollup(spark, d, keys=keys)
 
-        compact_term_stats(spark, d, upto_batch=upto_batch)
-        return {"path": d, "plane": kind, "result": None}
-    if kind == "packing":
-        from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
-            compact_pack_state,
-        )
 
-        compact_pack_state(spark, d, upto_batch=upto_batch)
-        return {"path": d, "plane": kind, "result": None}
-    if kind == "profile":
-        from spark_streaming_sql_s3_connector_spark.streaming.profile import (
-            compact_profile,
-        )
-
-        return {"path": d, "plane": kind, "result": compact_profile(spark, d)}
-    if kind == "drift_counts":
-        from spark_streaming_sql_s3_connector_spark.streaming.drift import (
-            compact_drift_counts,
-        )
-
-        return {"path": d, "plane": kind, "result": compact_drift_counts(spark, d)}
-    if kind == "embedding_moments":
-        from spark_streaming_sql_s3_connector_spark.streaming.drift import (
-            compact_embedding_moments,
-        )
-
-        return {
-            "path": d,
-            "plane": kind,
-            "result": compact_embedding_moments(spark, d),
-        }
-    if kind == "rollup":
-        from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-            compact_rollup,
-        )
-
-        cols = _delta_schema_cols(spark, os.path.join(d, "_deltas"))
-        keys = sorted(
-            c for c in cols if c != "bucket" and not c.startswith("_ca_")
-        )
-        return {
-            "path": d,
-            "plane": kind,
-            "result": compact_rollup(spark, d, keys=keys),
-        }
-    return {"path": d, "plane": kind, "result": "skipped"}
+# plane kind -> compactor(spark, plane_dir, upto_batch); each keeps its
+# own documented horizon meaning (see the module doc)
+_COMPACTORS = {
+    "ann_index": lambda spark, d, upto: compact_ann_index(
+        spark, d, upto_batch=upto
+    ),
+    "ann_lifecycle": _ann_lifecycle,
+    "minhash_bands": lambda spark, d, upto: dedup_index.compact_index(
+        spark, d, upto_batch=_screen_horizon(d, "_bands", upto)
+    ),
+    "key_screen": lambda spark, d, upto: exact_dedup.compact_index(
+        spark, d, upto_batch=_screen_horizon(d, "_new", upto)
+    ),
+    "term_stats": lambda spark, d, upto: term_stats.compact_term_stats(
+        spark, d, upto_batch=upto
+    ),
+    "packing": lambda spark, d, upto: packing_state.compact_pack_state(
+        spark, d, upto_batch=upto
+    ),
+    "profile": lambda spark, d, _: profile.compact_profile(spark, d),
+    "drift_counts": lambda spark, d, _: drift.compact_drift_counts(spark, d),
+    "embedding_moments": lambda spark, d, _: drift.compact_embedding_moments(
+        spark, d
+    ),
+    "rollup": _rollup,
+}
 
 
 def vacuum(
     spark: SparkSession, state_root: str, upto_batch: Optional[int] = None
 ) -> list[dict]:
     """Walk ``state_root``, compact every recognized state plane with
-    its safe default, GC superseded versions (each compactor's own GC),
-    and return the per-plane report. See the module doc for the
-    classification table and the ``upto_batch`` live-stream guard."""
+    its safe default through the kind→compactor table, GC superseded
+    versions (each compactor's own GC), and return the per-plane
+    report. See the module doc for the classification table and the
+    ``upto_batch`` live-stream guard."""
     report: list[dict] = []
     if not state_io.is_dir(state_root):
         return report
@@ -300,15 +246,13 @@ def vacuum(
         d = stack.pop()
         try:
             kind = classify_plane(spark, d)
-            entry = (
-                _vacuum_plane(spark, d, kind, upto_batch)
-                if kind is not None
-                else None
-            )
+            if kind is not None:
+                compact = _COMPACTORS.get(kind)
+                result = compact(spark, d, upto_batch) if compact else "skipped"
         except Exception as e:  # one sick plane must not stop the sweep
-            entry = {"path": d, "plane": "error", "result": f"{type(e).__name__}: {e}"}
-        if entry is not None:
-            report.append(entry)
+            kind, result = "error", f"{type(e).__name__}: {e}"
+        if kind is not None:
+            report.append({"path": d, "plane": kind, "result": result})
             continue  # a plane root is never also a container
         for e, isdir in sorted(state_io.list_names_info(d), reverse=True):
             p = os.path.join(d, e)
